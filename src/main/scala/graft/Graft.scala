@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.runtime.{Materializer, ModelDag, Sources}
+import org.apache.spark.sql.functions._
+import graft.model.{LeadActivitiesAgg, RefShapes, TrafficDailyAgg, TrafficPagesAgg}
+import graft.ops.Filters
+import graft.runtime.{Dag, Materializer, Sources}
+import graft.sql.SqlModels
 
 /** Library front door — what a reference (dbt) user calls after
   * switching: one object that builds a correctly-configured session and
@@ -14,8 +18,8 @@ import graft.runtime.{Materializer, ModelDag, Sources}
   * }}}
   *
   * Everything the facade touches is the same seam the gated queries use
-  * (Sources / Materializer / ModelDag), so the front door cannot drift
-  * from the verified paths.
+  * (Sources / Materializer / Dag), so the front door cannot drift from
+  * the verified paths.
   */
 object Graft {
 
@@ -81,14 +85,92 @@ object Graft {
     * dependency order into `warehouseDir` (incremental on re-run — the
     * Materializer reads each model's prior table for the watermark
     * seam). `sql = true` drives the run through the SQL surface
-    * instead of the DataFrame builders; both are row-identical
-    * (ModelDagSpec).
+    * instead of the DataFrame builders; both give the same rows and
+    * schemas.
     */
   def run(spark: SparkSession, sourceDir: String, warehouseDir: String,
           sql: Boolean = false): Map[String, DataFrame] = {
     Sources.bootstrap(spark)
-    val dag = new ModelDag(Sources(spark, sourceDir),
-      new Materializer(spark, warehouseDir))
-    if (sql) dag.runSql() else dag.run()
+    new Dag(new Materializer(spark, warehouseDir),
+      models(Sources(spark, sourceDir), sql)).run()
+  }
+
+  /** The reference's three models as [[Dag]] nodes, each an incremental
+    * upsert on `id` (SURVEY §2.10). The reference hides the
+    * traffic_daily_agg → lead_activities_agg dependency by reading model
+    * 1's output *as a source* (sources.yml:12 + lead_activities_agg.sql:110),
+    * so dbt would not order them; here it is a declared dep, and model 3
+    * receives model 1's freshly materialized output.
+    *
+    * `sql = true` builds each model from its SQL text (the `{{ this }}`
+    * seam resolved to the prior table through a temp view, the hidden
+    * edge through the `public_public.traffic_daily_agg` source view);
+    * otherwise from the DataFrame builders.
+    *
+    * @param log sink for the A5 debug lines (default: stdout).
+    */
+  private[graft] def models(sources: Sources, sql: Boolean,
+                            log: String => Unit = m => println(m)): Seq[Dag.Node] = {
+    val spark = sources.events.sparkSession
+    val events = RefShapes.eventsRef(sources.events)
+    def node(name: String, deps: String*)(
+        build: (Map[String, DataFrame], Option[DataFrame]) => DataFrame) =
+      Dag.Node(name, Dag.Mat.Incremental("id"), deps, build)
+    // `{{ this }}`: the prior table as a temp view, or no seam on a full build
+    def seam[T](prior: Option[DataFrame], view: String, full: T)(where: String => T): T =
+      prior.fold(full) { p => p.createOrReplaceTempView(view); where(view) }
+    if (!sql) Seq(
+      node("traffic_daily_agg") { (_, prior) =>
+        TrafficDailyAgg.build(events, RefShapes.campaignSpendsRef(sources.events), prior)
+      },
+      node("traffic_pages_agg") { (_, prior) => TrafficPagesAgg.build(events, prior) },
+      node("lead_activities_agg", "traffic_daily_agg") { (refs, prior) =>
+        logLeadDebugCounts(sources, events, prior, log)
+        LeadActivitiesAgg.build(events, RefShapes.leadStageChangeEventsRef(sources.events),
+          refs("traffic_daily_agg"), prior)
+      })
+    else {
+      SqlModels.registerCatalog(spark, sources.dir)
+      Seq(
+        node("traffic_daily_agg") { (_, prior) =>
+          val (ev, sp) = seam(prior, "graft_dag_this_daily", ("", ""))(
+            SqlModels.dailyIncrementalWheres)
+          SqlModels.runDaily(spark, ev, sp)
+        },
+        node("traffic_pages_agg") { (_, prior) =>
+          SqlModels.runPages(spark,
+            seam(prior, "graft_dag_this_pages", "")(SqlModels.pagesIncrementalWhere))
+        },
+        node("lead_activities_agg", "traffic_daily_agg") { (refs, prior) =>
+          refs("traffic_daily_agg").createOrReplaceTempView(
+            SqlModels.sourceView("public_public", "traffic_daily_agg"))
+          logLeadDebugCounts(sources, events, prior, log)
+          spark.sql(SqlModels.leadActivitiesAggSql(
+            seam(prior, "graft_dag_this_leads", "")(SqlModels.leadsIncrementalWhere)))
+        })
+    }
+  }
+
+  /** A5 — the reference's compile-time `run_query` debug block
+    * (lead_activities_agg.sql:9-31): immediately before model 3 runs, dbt
+    * executes two scalar count queries on the driver and logs them —
+    * (a) the lead-source input count, watermarked on `date >
+    * max(activity_date)` of the prior output when incremental, and
+    * (b) COUNT(DISTINCT domain_userid) over the bot-/internal-filtered
+    * page_view events. Both are O(1)-result driver collects mirroring
+    * dbt's pre-run scalars; neither feeds the pipeline (logging only).
+    */
+  private def logLeadDebugCounts(sources: Sources, events: DataFrame,
+                                 prior: Option[DataFrame], log: String => Unit): Unit = {
+    val leadsSrc = RefShapes.leadStageChangeEventsRef(sources.events)
+    val wm = Filters.watermark(prior, "activity_date")
+    val leadCount = Filters.watermarkFilter(leadsSrc, "date", wm).count()
+    log(s"Lead activities input count: $leadCount")
+    val eventUserCount = events
+      .filter(col("event") === "page_view" &&
+        Filters.botFilter(col("useragent")) &&
+        col("refr_medium") =!= "internal")
+      .agg(countDistinct(col("domain_userid"))).head().getLong(0)
+    log(s"Unique domain_userid in events: $eventUserCount")
   }
 }

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Levenshtein, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Levenshtein, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
-import graft.functions.{LevenshteinBand, MinHashSig, VecDot, WinnowSig}
+import graft.functions.LevenshteinBand
 
 /** Optimizer rule: every built-in THRESHOLDED `levenshtein(a, b, t)` with
   * a literal non-negative threshold becomes the codegen'd
@@ -39,34 +38,7 @@ object LevenshteinBandRewrite extends Rule[LogicalPlan] {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => exprs(1) match {
-        case Literal(k: Int, _) => MinHashSig(exprs.head, k)
-        case other => throw new IllegalArgumentException(
-          s"minhash_sig(arr, k): k must be an int literal, got $other")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_sig"),
-      new ExpressionInfo(classOf[WinnowSig].getName, "winnow_sig"),
-      (exprs: Seq[Expression]) => (exprs(1), exprs(2)) match {
-        case (Literal(k: Int, _), Literal(w: Int, _)) => WinnowSig(exprs.head, k, w)
-        case other => throw new IllegalArgumentException(
-          s"winnow_sig(text, k, w): k and w must be int literals, got $other")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("lev_band"),
-      new ExpressionInfo(classOf[LevenshteinBand].getName, "lev_band"),
-      (exprs: Seq[Expression]) => exprs(2) match {
-        case Literal(t: Int, _) => LevenshteinBand(exprs.head, exprs(1), t)
-        case other => throw new IllegalArgumentException(
-          s"lev_band(a, b, t): t must be an int literal, got $other")
-      }))
+    graft.functions.VectorFunctions.builders.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => LevenshteinBandRewrite)
   }
 }

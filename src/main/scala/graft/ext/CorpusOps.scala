@@ -231,7 +231,11 @@ object CorpusOps {
     * [[chunkTokens]]; expected chunk length ≈ 256/(cut+1) tokens.
     * Production CDC adds min/max chunk bounds via a sequential scan;
     * this form keeps the decision local so reruns and the oracle select
-    * identical boundaries. Map-side only.
+    * identical boundaries. Chunking itself is per-row; the only
+    * exchange is [[graft.runtime.Parallelize.fanOut]]'s hash
+    * repartition on `doc_id` when the input is narrower than the
+    * session's parallelism, which moves whole documents and so cannot
+    * change a boundary.
     */
   def chunkContentDefined(docs: DataFrame, k: Int = 3, cutHex: String = "07",
                           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {

@@ -343,38 +343,48 @@ case class LevenshteinBand(left: Expression, right: Expression, maxDist: Int)
 
 /** Registration + Column-API access for the vector expressions. */
 object VectorFunctions {
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+
+  private def entry(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** The engine's native SQL functions, one (identifier, info, builder)
+    * each — the single table both [[graft.GraftExtensions]] (declarative
+    * injection) and [[register]] (imperative, per session) install.
+    * Non-column arguments must be int literals: each kernel bakes them
+    * into generated code.
+    */
+  val builders: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    entry("vec_dot", classOf[VecDot])(exprs => VecDot(exprs.head, exprs(1))),
+    entry("minhash_sig", classOf[MinHashSig])(exprs => exprs(1) match {
+      case Literal(k: Int, _) => MinHashSig(exprs.head, k)
+      case other => throw new IllegalArgumentException(
+        s"minhash_sig(arr, k): k must be an int literal, got $other")
+    }),
+    entry("winnow_sig", classOf[WinnowSig])(exprs => (exprs(1), exprs(2)) match {
+      case (Literal(k: Int, _), Literal(w: Int, _)) => WinnowSig(exprs.head, k, w)
+      case other => throw new IllegalArgumentException(
+        s"winnow_sig(text, k, w): k and w must be int literals, got $other")
+    }),
+    entry("lev_band", classOf[LevenshteinBand])(exprs => exprs(2) match {
+      case Literal(t: Int, _) => LevenshteinBand(exprs.head, exprs(1), t)
+      case other => throw new IllegalArgumentException(
+        s"lev_band(a, b, t): t must be an int literal, got $other")
+    }))
 
   /** Idempotent per-session registration (the analyzer resolves
     * `call_function("vec_dot", ...)` against the session's registry, so
-    * every session that runs these plans must register first).
+    * every session that runs these plans must register first). Names the
+    * registry already holds — injected by [[graft.GraftExtensions]] or
+    * registered earlier — are left as they are.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(k: Int, _) =>
-          MinHashSig(exprs.head, k)
-        case other =>
-          throw new IllegalArgumentException(s"minhash_sig(arr, k): k must be an int literal, got $other")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("lev_band",
-      exprs => exprs(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(t: Int, _) =>
-          LevenshteinBand(exprs.head, exprs(1), t)
-        case other =>
-          throw new IllegalArgumentException(s"lev_band(a, b, t): t must be an int literal, got $other")
-      }, "built-in")
-    reg.createOrReplaceTempFunction("winnow_sig",
-      exprs => (exprs(1), exprs(2)) match {
-        case (org.apache.spark.sql.catalyst.expressions.Literal(k: Int, _),
-              org.apache.spark.sql.catalyst.expressions.Literal(w: Int, _)) =>
-          WinnowSig(exprs.head, k, w)
-        case other =>
-          throw new IllegalArgumentException(s"winnow_sig(text, k, w): k and w must be int literals, got $other")
-      }, "built-in")
+    builders.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
+    }
   }
 
   /** Codegen'd dot product of two array<double> columns. */

@@ -514,9 +514,11 @@ object CoreQueries {
   // (n-2)/sqrt(n(n-1)).
   // The moment battery is compute-bound (a dozen imperative buffers +
   // exact median per row) on a single-row-group scan: project the three
-  // live columns and repair scan parallelism so partial aggregation runs
-  // wide (guide §2.5; fanOut is a no-op on wide scans, and the partial
-  // aggregates make the exchange carry rows, not work).
+  // live columns (group key, quantity, price) plus l_orderkey, the fanOut
+  // distribution key, and repair scan parallelism so partial aggregation
+  // runs wide (guide §2.5; fanOut is a no-op on wide scans, where
+  // l_orderkey rides along unused, and the partial aggregates make the
+  // exchange carry rows, not work).
   private val a10Stats: Q = (s, dir) =>
     graft.runtime.Parallelize.fanOut(
         src(s, dir).lineitem

@@ -2,12 +2,12 @@ package graft.runtime
 
 import org.apache.spark.sql.DataFrame
 
-/** Generic model DAG with dbt's materialization kinds — the engine
-  * surface behind [[ModelDag]] (which hardcodes the reference's three
-  * models and their hidden edge). A dbt project is a set of named
-  * models, each declaring HOW it persists (`materialized=`) and reading
-  * others via `ref()`; this runner reproduces that contract over
-  * DataFrames:
+/** Model DAG with dbt's materialization kinds — the one batch runner,
+  * behind `Graft.run` (the reference's three models as Incremental
+  * nodes, the hidden daily → leads edge declared). A dbt project is a
+  * set of named models, each declaring HOW it persists
+  * (`materialized=`) and reading others via `ref()`; this runner
+  * reproduces that contract over DataFrames:
   *
   *  - `Table` — full refresh every run (dbt's default), through
   *    [[Materializer.materializeTable]]'s versioned commit.
@@ -35,7 +35,7 @@ import org.apache.spark.sql.DataFrame
   * names, before any model runs. On a cluster, independent Table/
   * Incremental nodes are independent Spark jobs (the runner is
   * sequential; concurrency across independent subtrees is the
-  * scheduler's job, as in ModelDag).
+  * scheduler's job).
   */
 object Dag {
 

@@ -45,11 +45,6 @@ import java.nio.file.{Files, Paths}
   * feed: any retained commit is readable, and the key-level diff
   * between two commits is one full-outer join ([[ChangeFeed]]).
   *
-  * LEGACY layout (a fixed `<model>` live dir, pre-manifest): still
-  * readable — resolution falls back to it when no pointer exists, and
-  * [[recover]] still repairs its interrupted two-rename swaps
-  * (`__old` marker). The first manifest materialize reads it as the
-  * prior; the second deletes it (it is ≥2 generations stale by then).
   * [[materializeByDatePartition]] and the microbatch surface commit
   * through [[commitWindowedVersion]]: ordinary pointer-flip versions
   * whose partition entries are symlinks into a `<model>__windata`
@@ -68,7 +63,7 @@ import java.nio.file.{Files, Paths}
   * concurrent callers SERIALIZABLE: each build reads the previous
   * winner's table as its prior instead of racing its prior scan against
   * another writer's commit. A SEPARATE swap monitor guards only the
-  * commit window, recovery, and [[withSwapLock]] readers — so a reader
+  * commit window and [[withSwapLock]] readers — so a reader
   * pinning this table (a downstream streaming model) waits out a
   * pointer flip, never a multi-second build. Lock order everywhere:
   * writer mutex → file lock → swap monitor. The anti-join form shuffles
@@ -104,14 +99,14 @@ final class Materializer(spark: SparkSession, baseDir: String,
     }
 
   /** Directory of the model's CURRENT table: the manifest-resolved
-    * version dir, or the legacy fixed dir when no pointer exists. Safe
-    * to hand to `spark.read.parquet`; becomes stale only after TWO
-    * subsequent materializes (see class doc).
+    * version dir. Safe to hand to `spark.read.parquet`; becomes stale
+    * only after TWO subsequent materializes (see class doc). Throws if
+    * the model was never committed.
     */
   def outPath(model: String): String =
-    currentVersion(model).map(v => s"$baseDir/$v").getOrElse(legacyPath(model))
+    currentVersion(model).map(v => s"$baseDir/$v").getOrElse(
+      throw new IllegalStateException(s"no committed table $model in $baseDir"))
 
-  private def legacyPath(model: String): String = s"$baseDir/$model"
   private def pointerPath(model: String): java.nio.file.Path =
     Paths.get(baseDir, model + ".current")
 
@@ -217,11 +212,9 @@ final class Materializer(spark: SparkSession, baseDir: String,
   // instances on one warehouse:
   //  - the WRITER mutex serializes whole materialize runs (dbt's
   //    model-never-runs-concurrently-with-itself contract);
-  //  - the SWAP monitor guards only the rename window and recovery, so
-  //    withSwapLock READERS wait microseconds for a swap, never minutes
-  //    for a build.
-  // Lock ORDER is writer → OS file lock → swap, everywhere — recover
-  // takes the file lock BEFORE the swap monitor for exactly this reason.
+  //  - the SWAP monitor guards only the pointer flip, so withSwapLock
+  //    READERS wait microseconds for a swap, never minutes for a build.
+  // Lock ORDER is writer → OS file lock → swap, everywhere.
   // The canonical key resolves symlinks (toRealPath): two aliases of one
   // warehouse must share monitors, or they would meet unsynchronized at
   // the same physical lock file and throw OverlappingFileLockException.
@@ -237,11 +230,11 @@ final class Materializer(spark: SparkSession, baseDir: String,
 
   /** Run `f` holding the model's cross-process lock file (blocking OS
     * lock). A per-key ReentrantLock gates the acquisition: a nested call
-    * on the SAME thread (recover inside materialize) rides the held OS
-    * lock via the hold count, while a second THREAD blocks on the gate —
-    * `FileChannel.lock` on a file this JVM already holds would throw
-    * OverlappingFileLockException rather than block, so the JVM-level
-    * gate must win before the OS-level lock is touched.
+    * on the SAME thread rides the held OS lock via the hold count, while
+    * a second THREAD blocks on the gate — `FileChannel.lock` on a file
+    * this JVM already holds would throw OverlappingFileLockException
+    * rather than block, so the JVM-level gate must win before the
+    * OS-level lock is touched.
     */
   private def withFileLock[T](model: String)(f: => T): T = {
     val gate = Materializer.fileLockGates.computeIfAbsent(
@@ -259,63 +252,18 @@ final class Materializer(spark: SparkSession, baseDir: String,
     } finally gate.unlock()
   }
 
-  /** Run `f` holding the model's swap lock: no swap or recovery of this
-    * model's directories can interleave. Use to pin the table across a
-    * read that must not see a mid-swap directory (force the scan —
-    * collect/localCheckpoint — INSIDE `f`; a lazy plan escapes the
-    * lock).
-    *
-    * Recovery runs BEFORE the monitor is taken — the global lock order
-    * is writer → file lock → swap monitor, so a recover() fired from
-    * INSIDE `f` (readPrior on a crash-leftover `__old`) must not be the
-    * first acquisition of the file-lock gate: a concurrent materialize
-    * holds that gate and waits for this monitor to swap, and the
-    * monitor-holding reader waiting for the gate is a circular wait.
-    * recover() is therefore a no-op under a held swap monitor (see its
-    * doc for the crash-window trade).
+  /** Run `f` holding the model's swap lock: no commit of this model can
+    * interleave. Use to pin the table across a read that must not see a
+    * mid-commit state (force the scan — collect/localCheckpoint — INSIDE
+    * `f`; a lazy plan escapes the lock). Reads inside `f` take no other
+    * lock, so a concurrent writer (writer mutex → file lock → this
+    * monitor) only waits for `f` to finish.
     */
-  def withSwapLock[T](model: String)(f: => T): T = {
-    recover(model)
+  def withSwapLock[T](model: String)(f: => T): T =
     lockFor(model).synchronized(f)
-  }
 
-  /** Repair an interrupted swap before any read — and ONLY when the
-    * marker state is actually inconsistent (a `__old` dir exists).
-    * Prefer `__old` (the last complete table) when the live dir is
-    * missing; a `__old` beside a live table is the post-swap leftover
-    * and is dropped. A lone `__tmp` is never touched (see class doc:
-    * it may be a concurrent materialize's in-flight write). Idempotent;
-    * no-op — no filesystem mutation at all — on a healthy table.
-    */
-  private def recover(model: String): Unit = {
-    // Lock-order guard: NEVER acquire the file-lock gate while this
-    // thread already holds the swap monitor (gate-holder may be waiting
-    // on the monitor — circular wait). withSwapLock pre-recovers before
-    // entering the monitor, so under the monitor there is nothing left
-    // to repair from THIS JVM; the residual window — a cross-process
-    // writer crashing mid-swap while we hold the monitor — degrades to
-    // a missing-table read this call, repaired by the next recover.
-    if (Thread.holdsLock(lockFor(model))) return
-    val out = Paths.get(legacyPath(model))
-    val bak = Paths.get(legacyPath(model) + "__old")
-    // racy probe first: the healthy-table fast path takes no lock at all.
-    // On a hit, acquire file lock BEFORE the swap monitor (the global
-    // lock order) and re-check — another process/thread may have
-    // completed this same recovery in between.
-    if (Files.exists(bak)) withFileLock(model) {
-      lockFor(model).synchronized {
-        if (Files.exists(bak)) {
-          if (!Files.exists(out)) Files.move(bak, out)
-          else deleteRecursive(bak)
-        }
-      }
-    }
-  }
-
-  def exists(model: String): Boolean = {
-    recover(model)
-    Files.exists(Paths.get(outPath(model), "_SUCCESS"))
-  }
+  def exists(model: String): Boolean =
+    currentVersion(model).exists(v => Files.exists(Paths.get(baseDir, v, "_SUCCESS")))
 
   def readPrior(model: String): Option[DataFrame] =
     if (exists(model)) Some(spark.read.parquet(outPath(model))) else None
@@ -477,8 +425,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
       val newSeq = (log.map(_._1) :+ 0L).max + 1
       // GC everything this commit supersedes BEFORE the pointer flip:
       // version dirs outside the retention window (crash orphans +
-      // aged-out history), stale pointer/log temps, and — once a
-      // pointer already exists — the ≥2-generations-old legacy dirs.
+      // aged-out history) and stale pointer/log temps.
       // The retention window is the newest keepVersions-1 LOGGED
       // versions plus the new dir; `prev` is kept regardless (it is
       // what uncoordinated readers may still be scanning — normally
@@ -492,10 +439,6 @@ final class Materializer(spark: SparkSession, baseDir: String,
         .filter(n => n.startsWith(model + ".current__tmp_") ||
           n.startsWith(model + ".versions__tmp_"))
         .foreach(n => Files.deleteIfExists(Paths.get(baseDir, n)))
-      if (prev.isDefined) {
-        deleteRecursive(Paths.get(legacyPath(model)))
-        deleteRecursive(Paths.get(legacyPath(model) + "__old"))
-      }
       writeLog(model, log.filter { case (_, d) => keep(d) } :+ ((newSeq, newName)))
       publishPointer(model, newName)
       gcWindowData(model)
@@ -692,7 +635,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
     * model it commits.
     */
   private def stagingDir(model: String): java.nio.file.Path =
-    Paths.get(legacyPath(model) + "__stage_" +
+    Paths.get(baseDir, model + "__stage_" +
       java.util.UUID.randomUUID().toString.replace("-", ""))
 
   private def windataDir(model: String): java.nio.file.Path =
@@ -727,12 +670,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
     * only uncommitted bytes, GC'd by the next commit. `clearAbsent`
     * lists partitions whose ABSENCE from staging means "rebuilt to zero
     * rows": they are dropped from the new version (empty means empty —
-    * insert_overwrite, not dynamic overwrite). A pre-manifest table's
-    * real partition dirs migrate into windata on the first windowed
-    * commit by rename + a symlink left IN PLACE, so the legacy table
-    * stays complete through a crash before publish (the retry carries
-    * the links forward; [[gcWindowData]] counts legacy links as live
-    * references for exactly that window).
+    * insert_overwrite, not dynamic overwrite).
     */
   private def commitWindowedVersion(model: String, dateCol: String,
                                     staging: java.nio.file.Path,
@@ -740,7 +678,6 @@ final class Materializer(spark: SparkSession, baseDir: String,
     import java.nio.file.Files
     val windata = windataDir(model)
     Files.createDirectories(windata)
-    healMigrations(model, windata)
     val newName = model + "__v_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val newDir = Paths.get(baseDir, newName)
@@ -760,9 +697,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
         Files.createSymbolicLink(newDir.resolve(part), real.toAbsolutePath)
       }
       // untouched windows: carry the previous version's targets forward
-      val priorDir = currentVersion(model).map(v => Paths.get(baseDir, v))
-        .orElse(Some(Paths.get(legacyPath(model))).filter(Files.exists(_)))
-      priorDir.foreach { pd =>
+      currentVersion(model).map(v => Paths.get(baseDir, v)).foreach { pd =>
         val entries = Option(pd.toFile.list()).toSeq.flatten
         // a prior KEYED commit has root data files, not date= dirs —
         // carrying nothing forward would silently shrink the table to
@@ -775,27 +710,8 @@ final class Materializer(spark: SparkSession, baseDir: String,
           .filter(n => n.startsWith(dateCol + "=") &&
             !written.contains(n) && !clearAbsent.contains(n))
           .foreach { part =>
-            val entry = pd.resolve(part)
-            val real =
-              if (Files.isSymbolicLink(entry)) entry.toRealPath()
-              else {
-                // pre-manifest real dir: migrate by rename, leaving a
-                // symlink in its place — the legacy table stays whole
-                // if this commit crashes before publish. The rename and
-                // the re-link are two steps; a `__mig_` intent marker
-                // brackets them so [[healMigrations]] can finish the
-                // re-link after a crash in between (without the marker
-                // the retry's carry-forward would silently drop the
-                // window and GC would sweep its bytes)
-                val r = windata.resolve(s"${part}__v${nextSeq(part)}")
-                val marker = windata.resolve(s"__mig_${r.getFileName}")
-                Files.createFile(marker)
-                Files.move(entry, r)
-                Files.createSymbolicLink(entry, r.toAbsolutePath)
-                Files.deleteIfExists(marker)
-                r
-              }
-            Files.createSymbolicLink(newDir.resolve(part), real.toAbsolutePath)
+            Files.createSymbolicLink(newDir.resolve(part),
+              pd.resolve(part).toRealPath().toAbsolutePath)
           }
       }
       Files.createFile(newDir.resolve("_SUCCESS"))
@@ -810,39 +726,8 @@ final class Materializer(spark: SparkSession, baseDir: String,
       .foreach(n => Fs.deleteRecursive(Paths.get(baseDir, n)))
   }
 
-  /** Recover legacy-partition migrations that crashed between the
-    * rename into windata and the symlink left in the legacy dir. Each
-    * migration stamps a `__mig_<entry>` intent marker first, so a
-    * surviving marker whose legacy entry is missing while its windata
-    * dir exists identifies a lost window DEFINITIVELY — a failed fresh
-    * write's windata orphan carries no marker and must NOT resurface
-    * (re-linking it would publish a crashed commit's data). All other
-    * marker states are benign: move not yet done (entry still real) or
-    * link already done (entry is a symlink) → just drop the marker.
-    * Runs at the top of every windowed commit, before carry-forward
-    * and GC, under the same writer/file locks.
-    */
-  private def healMigrations(model: String, windata: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, LinkOption}
-    Option(windata.toFile.list()).toSeq.flatten
-      .filter(_.startsWith("__mig_")).foreach { mk =>
-        val entryName = mk.stripPrefix("__mig_")
-        val real = windata.resolve(entryName)
-        val cut = entryName.lastIndexOf("__v")
-        if (cut > 0) {
-          val part = entryName.substring(0, cut)
-          val legacyEntry = Paths.get(legacyPath(model)).resolve(part)
-          if (Files.exists(real) &&
-              !Files.exists(legacyEntry, LinkOption.NOFOLLOW_LINKS))
-            Files.createSymbolicLink(legacyEntry, real.toAbsolutePath)
-        }
-        Files.deleteIfExists(windata.resolve(mk))
-      }
-  }
-
   /** Mark-and-sweep for `<model>__windata`: a real window dir is live
-    * while ANY on-disk version dir's symlink — or a migration link left
-    * in the legacy dir — references it. References compare by windata
+    * while ANY on-disk version dir's symlink references it. References compare by windata
     * entry NAME (every link this class creates targets this model's
     * windata, and names are unique there): comparing full paths would
     * mis-match whenever the warehouse is reached through a symlinked
@@ -856,22 +741,13 @@ final class Materializer(spark: SparkSession, baseDir: String,
     import java.nio.file.Files
     val windata = windataDir(model)
     if (!Files.isDirectory(windata)) return
-    val referrers = versionDirs(model).map(Paths.get(baseDir, _)) :+
-      Paths.get(legacyPath(model))
-    val referenced: Set[String] = referrers.flatMap { vd =>
+    val referenced: Set[String] = versionDirs(model).map(Paths.get(baseDir, _)).flatMap { vd =>
       Option(vd.toFile.list()).toSeq.flatten.map(vd.resolve)
         .filter(Files.isSymbolicLink(_))
         .map(p => Files.readSymbolicLink(p).getFileName.toString)
     }.toSet
-    // `__mig_` intent markers and their bracketed entries are mid-
-    // migration state, healed by [[healMigrations]] before any sweep —
-    // never GC fodder
-    val entries = Option(windata.toFile.list()).toSeq.flatten
-    val midMigration = entries.filter(_.startsWith("__mig_"))
-      .map(_.stripPrefix("__mig_")).toSet
-    entries
-      .filterNot(_.startsWith("__mig_"))
-      .filterNot(n => referenced(n) || midMigration(n))
+    Option(windata.toFile.list()).toSeq.flatten
+      .filterNot(referenced)
       .foreach(n => Fs.deleteRecursive(windata.resolve(n)))
   }
 
@@ -883,8 +759,8 @@ object Materializer {
   // Materializer instances over one warehouse serialize on the same
   // objects (per-instance maps would let two instances race the renames
   // and deadlock-by-exception on the shared OS file lock). writerLocks
-  // serialize whole materialize runs; swapLocks guard only the rename
-  // window (+ recovery + withSwapLock readers).
+  // serialize whole materialize runs; swapLocks guard only the pointer
+  // flip (+ withSwapLock readers).
   private val writerLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private val swapLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   // per-key gates serializing OS-file-lock acquisition inside one JVM

@@ -85,7 +85,7 @@ object SqlModels {
 
   // Per-model seam resolutions — the single source for each model's
   // watermark wiring, shared by the registry's gated incremental queries
-  // (SqlQueries) and the DAG runner (ModelDag.runSql).
+  // (SqlQueries) and the DAG run's SQL surface (Graft.run(sql = true)).
 
   /** Pages seam (traffic_pages_agg.sql:20-24): one watermark on `date`. */
   def pagesIncrementalWhere(thisView: String): String =
@@ -147,7 +147,7 @@ object SqlModels {
       |  FROM page_traffic
       |),
       |final_rows AS (
-      |  SELECT ROW_NUMBER() OVER (ORDER BY date, company_domain, page_urlpath, type) AS id,
+      |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY date, company_domain, page_urlpath, type) AS BIGINT) AS id,
       |         1 AS company_id, company_domain, date, type, page_urlpath, traffic
       |  FROM labeled_visits
       |)

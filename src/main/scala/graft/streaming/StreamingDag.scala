@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import graft.model.LeadActivitiesAgg
 import graft.runtime.Materializer
 
-/** The streaming analog of `ModelDag.run`: all three reference models
+/** The streaming analog of `Graft.run`: all three reference models
   * maintained CONTINUOUSLY off one `atomic.events` source, writing the
   * same tables batch dbt-runs would (reference model names), through
   * the same production Materializer.
@@ -53,8 +53,8 @@ final class StreamingDag(spark: SparkSession, events: DataFrame,
 
   /** Start model 3's touch stream. Its spend dimension is re-derived
     * from the CURRENT daily table each micro-batch, scanned to
-    * completion inside the swap lock so a concurrent daily upsert can
-    * neither vanish mid-read nor be clobbered by recovery.
+    * completion inside the swap lock so a concurrent daily upsert
+    * cannot flip the table mid-read.
     */
   def startLeads(): StreamingQuery = {
     val touches = LeadEnrichment.lastTouch(LeadEnrichment.toLeadTouches(events))

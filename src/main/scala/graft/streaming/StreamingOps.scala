@@ -153,78 +153,37 @@ object StreamingOps {
 
   /** Continuous corpus ingest — the end-to-end streaming front door:
     * each micro-batch is exact-deduped WITHIN itself (keep-lowest) and
-    * against the ALREADY-MATERIALIZED corpus (Bloom-routed,
+    * against the ALREADY-INGESTED corpus (Bloom-routed,
     * [[graft.ext.IngestOps.appendDedupExact]] — the corpus is scanned,
-    * never repartitioned), then appended through the Materializer's
-    * locked swap. foreachBatch is the stream↔external-table bridge: the
-    * corpus is re-read as each batch's prior inside the materialize
-    * locks, so concurrent writers serialize and restarts re-dedup
-    * against whatever actually landed — a REPLAYED micro-batch is
-    * idempotent twice over (its rows upsert their own doc_ids, and its
-    * content dedups against its previous append).
+    * never repartitioned), then its survivors land as one new fragment
+    * of the [[graft.runtime.FragmentedTable]] `model` in `mat`'s
+    * warehouse ([[corpusIngestFragmentedSink]]'s body). foreachBatch is
+    * the stream↔external-table bridge: restarts re-dedup against
+    * whatever actually landed, so a REPLAYED micro-batch dedups against
+    * its own previous append and writes nothing.
+    *
+    * `compactEvery` > 0 TIER-folds the newest small-fragment run every
+    * Nth micro-batch (keyed on batchId, so a replay repeats at most one
+    * compaction) — per-cadence I/O stays proportional to the recent
+    * batches, the settled base fragment is never rewritten on cadence
+    * ([[graft.runtime.FragmentedTable.compactTiered]]); the O(corpus)
+    * full fold remains an explicit maintenance call.
     *
     * Contrast [[dedupExactStream]]: that holds the fingerprint set as
     * STREAMING STATE (exact, but state grows with the corpus and dies
-    * with the checkpoint); this holds it in the materialized table
-    * itself — unbounded corpus, restart-safe, at the cost of a corpus
-    * scan per micro-batch (amortized by the Bloom route).
-    */
-  /** DEFAULT = the O(batch) [[graft.runtime.FragmentedTable]] path
-    * ([[corpusIngestFragmentedSink]]'s body): each trigger writes only
-    * its surviving batch as a new fragment, and `compactEvery` > 0
-    * TIER-folds the newest small-fragment run every Nth micro-batch
-    * (keyed on batchId, so a replay repeats at most one compaction) —
-    * per-cadence I/O stays proportional to the recent batches, the
-    * settled base fragment is never rewritten on cadence
-    * ([[graft.runtime.FragmentedTable.compactTiered]]); the O(corpus)
-    * full fold remains an explicit maintenance call. A pre-existing
-    * Materializer table of the same name is seeded into the fragment
-    * store ONCE at sink construction, so upgrading a deployment keeps
-    * its corpus.
-    *
-    * `wholeTableRewrite = true` opts into the legacy Materializer form —
-    * every trigger re-writes the whole table through the versioned
-    * manifest commit (time travel / change feed compose, at O(corpus)
-    * write amplification per trigger: model-sized outputs only, never a
-    * high-frequency ingest of a large corpus).
+    * with the checkpoint); this holds it in the table itself —
+    * unbounded corpus, restart-safe, at the cost of a corpus scan per
+    * micro-batch (amortized by the Bloom route).
     */
   def corpusIngestSink(docs: DataFrame, mat: Materializer,
-                       model: String, compactEvery: Long = 0L,
-                       compactTargetFiles: Int = 8,
-                       wholeTableRewrite: Boolean = false): DataStreamWriter[Row] =
-    if (!wholeTableRewrite)
-      corpusIngestFragmentedSink(docs, seeded(mat, model, "doc_id"), compactEvery)
-    else docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        mat.materialize(model, "doc_id") {
-          case None        => graft.ext.DedupOps.dedupExact(batch)
-          case Some(prior) => graft.ext.IngestOps.appendDedupExact(prior, batch)
-        }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          mat.compact(model, compactTargetFiles)
-        ()
-    }
+                       model: String, compactEvery: Long = 0L): DataStreamWriter[Row] =
+    corpusIngestFragmentedSink(docs, mat.fragmented(model, "doc_id"), compactEvery)
 
-  /** Fragment-store handle for `table`, seeded once from a pre-existing
-    * Materializer table of the same name (the upgrade path: a corpus
-    * ingested under the legacy whole-table sinks keeps its rows when the
-    * deployment flips to the fragmented default). The seed is a single
-    * O(corpus) upsert, paid at sink construction, never per trigger.
-    */
-  private def seeded(mat: Materializer, table: String,
-                     uniqueKey: String): graft.runtime.FragmentedTable = {
-    val frag = mat.fragmented(table, uniqueKey)
-    if (frag.read().isEmpty && mat.exists(table))
-      mat.readPrior(table).foreach(frag.upsert)
-    frag
-  }
-
-  /** [[corpusIngestSink]] over a [[graft.runtime.FragmentedTable]]: the
-    * same Bloom-routed exact-dedup bridge, but each trigger WRITES only
-    * its surviving batch as a new fragment (O(batch)) instead of paying
-    * the Materializer's whole-table parquet rewrite — the cost profile a
-    * high-frequency ingest of a large corpus needs, trading bounded read
-    * amplification that the `compactEvery` cadence folds away. Replay
+  /** [[corpusIngestSink]] over any fragment store: each trigger WRITES
+    * only its surviving batch as a new fragment (O(batch)) — the cost
+    * profile a high-frequency ingest of a large corpus needs, trading
+    * bounded read amplification that the `compactEvery` cadence folds
+    * away. Replay
     * stays idempotent (a redelivered batch's rows dedup against their
     * own previous fragment and the empty survivor set writes nothing).
     */
@@ -425,13 +384,9 @@ object StreamingOps {
     * predicate result counts as failing, the dbt-test convention) BEFORE
     * dedup. Rows failing any check land in `<model>__rejects` carrying
     * the FIRST failing check's name as `reject_reason`; only valid rows
-    * continue into the exact-dedup ingest. DEFAULT = both tables commit
-    * as O(batch) fragments ([[corpusIngestQuarantineFragmentedSink]]'s
-    * body, seeded once from pre-existing Materializer tables);
-    * `wholeTableRewrite = true` opts into the legacy Materializer
-    * upsert-by-doc_id (O(corpus) write per trigger). Either way a
-    * replayed micro-batch is
-    * idempotent on BOTH sides: its rejects upsert their own ids, its
+    * continue into the exact-dedup ingest. Both tables commit as
+    * O(batch) fragments ([[corpusIngestQuarantineFragmentedSink]]'s
+    * body). A replayed micro-batch is idempotent on BOTH sides: its rejects upsert their own ids, its
     * valid rows content-dedup against their previous append. The
     * quarantine is a queryable TABLE, not a log line — ops inspect it,
     * fix upstream, re-ingest (fixed ids upsert into the corpus), expire
@@ -440,31 +395,10 @@ object StreamingOps {
     */
   def corpusIngestQuarantineSink(docs: DataFrame, mat: Materializer, model: String,
                                  checks: Seq[(String, org.apache.spark.sql.Column)],
-                                 compactEvery: Long = 0L,
-                                 wholeTableRewrite: Boolean = false
-                                ): DataStreamWriter[Row] = {
+                                 compactEvery: Long = 0L): DataStreamWriter[Row] = {
     require(checks.nonEmpty, "at least one validity check required")
-    if (!wholeTableRewrite)
-      corpusIngestQuarantineFragmentedSink(docs, seeded(mat, model, "doc_id"),
-        seeded(mat, model + "__rejects", "doc_id"), checks, compactEvery)
-    else docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val fails = checks.map { case (n, p) => (n, not(coalesce(p, lit(false)))) }
-        val reason = fails.tail
-          .foldLeft(when(fails.head._2, lit(fails.head._1))) {
-            case (acc, (n, f)) => acc.when(f, lit(n))
-          }.otherwise(lit(null).cast("string"))
-        val marked = batch.withColumn("reject_reason", reason)
-        val rejects = marked.filter(col("reject_reason").isNotNull)
-        if (!rejects.isEmpty)
-          mat.materialize(model + "__rejects", "doc_id")(_ => rejects)
-        val valid = marked.filter(col("reject_reason").isNull).drop("reject_reason")
-        mat.materialize(model, "doc_id") {
-          case None        => graft.ext.DedupOps.dedupExact(valid)
-          case Some(prior) => graft.ext.IngestOps.appendDedupExact(prior, valid)
-        }
-        ()
-    }
+    corpusIngestQuarantineFragmentedSink(docs, mat.fragmented(model, "doc_id"),
+      mat.fragmented(model + "__rejects", "doc_id"), checks, compactEvery)
   }
 
   /** [[corpusIngestSink]] with NEAR-dup awareness: each micro-batch
@@ -490,12 +424,9 @@ object StreamingOps {
     *      side-table, append survivors to the corpus. Their signatures
     *      land at the next trigger's repair.
     *
-    * DEFAULT = both tables commit as O(batch) fragments
-    * ([[corpusIngestNearDupFragmentedSink]]'s body, seeded once from
-    * pre-existing Materializer tables). `wholeTableRewrite = true` opts
-    * into the legacy Materializer upsert, whose whole-table parquet
-    * rewrite per trigger (parquet has no MERGE) suits model-sized
-    * outputs only. The sink assumes ONE ingest stream
+    * Both tables commit as O(batch) fragments
+    * ([[corpusIngestNearDupFragmentedSink]]'s body). The sink assumes
+    * ONE ingest stream
     * per model (the usual topology — a streaming query owns its sink
     * tables); `hotShingles` is a PINNED stopword-shingle list baked into
     * stored signatures, so it must stay constant for a table's lifetime.
@@ -506,49 +437,10 @@ object StreamingOps {
                               threshold: Double,
                               numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
                               hotShingles: Seq[String] = Nil,
-                              compactEvery: Long = 0L,
-                              wholeTableRewrite: Boolean = false): DataStreamWriter[Row] =
-    if (!wholeTableRewrite)
-      corpusIngestNearDupFragmentedSink(docs, seeded(mat, model, "doc_id"),
-        seeded(mat, model + "__sigs", "doc_id"), threshold, numHashes, bands,
-        shingleK, hotShingles, compactEvery)
-    else docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val sigsModel = model + "__sigs"
-        if (mat.exists(model)) {
-          mat.materialize(sigsModel, "doc_id") { priorSigs =>
-            val corpus = mat.readPrior(model).get
-            val unsigned = priorSigs match {
-              case None     => corpus
-              case Some(ps) =>
-                corpus.join(ps.select("doc_id"), Seq("doc_id"), "left_anti")
-            }
-            val signed = graft.ext.IngestOps.minHashSigsOf(unsigned, numHashes,
-              shingleK, hotShingles = hotShingles)
-            // TOMBSTONE docs that yield no signature (empty/whitespace
-            // text, or every shingle hot): without a side-table row the
-            // id-keyed repair anti-join would classify them "unsigned"
-            // and re-tokenize them on EVERY trigger forever. An
-            // empty-toks row carries no dedup signal and is filtered out
-            // of the check (appendDedupNearDupIndexed) — it exists only
-            // so the repair converges.
-            val tomb = unsigned.select(col("doc_id"))
-              .join(signed.select("doc_id"), Seq("doc_id"), "left_anti")
-              .select(col("doc_id"),
-                array().cast("array<string>").as("toks"),
-                array().cast("array<bigint>").as("sig"))
-            signed.unionByName(tomb)
-          }
-        }
-        mat.materialize(model, "doc_id") { prior =>
-          val exS = (if (prior.isDefined) mat.readPrior(sigsModel) else None)
-            .getOrElse(graft.ext.IngestOps.minHashSigsOf(batch.limit(0),
-              numHashes, shingleK, hotShingles = hotShingles))
-          graft.ext.IngestOps.appendDedupNearDupIndexed(exS, batch, threshold,
-            numHashes, bands, shingleK, hotShingles = hotShingles)
-        }
-        ()
-    }
+                              compactEvery: Long = 0L): DataStreamWriter[Row] =
+    corpusIngestNearDupFragmentedSink(docs, mat.fragmented(model, "doc_id"),
+      mat.fragmented(model + "__sigs", "doc_id"), threshold, numHashes, bands,
+      shingleK, hotShingles, compactEvery)
 
   /** [[corpusIngestNearDupSink]] over [[graft.runtime.FragmentedTable]]s:
     * identical repair → check+append protocol and `__sigs` side-table
@@ -559,7 +451,7 @@ object StreamingOps {
     * amplification trade `compactEvery` bounds), but signature COMPUTE
     * stays ∝ unsigned rows — normally exactly the previous trigger's
     * survivors. Same one-stream-per-model, pinned-`hotShingles`, and
-    * append-only-ids contracts as the Materializer-backed sink.
+    * append-only-ids contracts as [[corpusIngestNearDupSink]].
     */
   def corpusIngestNearDupFragmentedSink(docs: DataFrame,
                                         frag: graft.runtime.KeyedFragmentStore,
@@ -574,8 +466,13 @@ object StreamingOps {
         // 1. REPAIR: sign corpus rows missing from the side-table (the
         // previous trigger's append, the whole corpus on migration, or
         // the crash gap) — self-healing, so the two fragment tables need
-        // no cross-table atomic commit. Tombstone signature-less docs so
-        // the id-keyed anti-join converges (see corpusIngestNearDupSink).
+        // no cross-table atomic commit. TOMBSTONE docs that yield no
+        // signature (empty/whitespace text, or every shingle hot):
+        // without a side-table row the id-keyed anti-join would classify
+        // them "unsigned" and re-tokenize them on EVERY trigger forever.
+        // An empty-toks row carries no dedup signal and is filtered out
+        // of the check (appendDedupNearDupIndexed) — it exists only so
+        // the repair converges.
         frag.read().foreach { corpus =>
           val unsigned = sigsFrag.read() match {
             case None     => corpus
@@ -1142,36 +1039,20 @@ object StreamingOps {
     * bridge for vector corpora — each micro-batch drops vectors whose
     * cosine similarity to the materialized corpus reaches `threshold`
     * (within-batch greedy removal first), then appends survivors
-    * through the Materializer's manifest commit
     * ([[graft.ext.IngestOps.appendDedupEmbeddings]]: the batch
     * broadcasts into the corpus scan — exact screening, no corpus
     * shuffle). Same table-is-the-state restart story as the text
     * sinks: a replayed batch's vectors are cosine-1.0 duplicates of
-    * their own previous append and are absorbed. DEFAULT = the corpus
-    * commits as O(batch) fragments ([[corpusIngestEmbedFragmentedSink]]'s
-    * body, seeded once from a pre-existing Materializer table);
-    * `wholeTableRewrite = true` opts into the legacy whole-table
-    * Materializer upsert. For large batches swap the exact screen for
-    * the indexed probe ([[corpusIngestEmbedIndexedSink]]).
+    * their own previous append and are absorbed. The corpus commits as
+    * O(batch) fragments ([[corpusIngestEmbedFragmentedSink]]'s body).
+    * For large batches swap the exact screen for the indexed probe
+    * ([[corpusIngestEmbedIndexedSink]]).
     */
   def corpusIngestEmbedSink(vecs: DataFrame, mat: Materializer, model: String,
                             threshold: Double,
-                            compactEvery: Long = 0L,
-                            wholeTableRewrite: Boolean = false): DataStreamWriter[Row] =
-    if (!wholeTableRewrite)
-      corpusIngestEmbedFragmentedSink(vecs, seeded(mat, model, "vec_id"),
-        threshold, compactEvery)
-    else vecs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        mat.materialize(model, "vec_id") {
-          case None => graft.ext.DedupOps.removeNearDups(batch,
-            graft.ext.SimilarityOps.cosinePairs(batch, threshold),
-            idCol = "vec_id", dropCol = "vec_b")
-          case Some(prior) =>
-            graft.ext.IngestOps.appendDedupEmbeddings(prior, batch, threshold)
-        }
-        ()
-    }
+                            compactEvery: Long = 0L): DataStreamWriter[Row] =
+    corpusIngestEmbedFragmentedSink(vecs, mat.fragmented(model, "vec_id"),
+      threshold, compactEvery)
 
   /** [[corpusIngestEmbedSink]] over a [[graft.runtime.FragmentedTable]]:
     * the same exact cosine screen (batch broadcasts into the merged

@@ -78,4 +78,31 @@ class GraftExtensionsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("VectorFunctions.register is idempotent: a Graft.session keeps its injected functions") {
+    val prior = SparkSession.getDefaultSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val s = Graft.session(master = "local[2]")
+    try {
+      val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.functionRegistry
+      def installed() = graft.functions.VectorFunctions.builders
+        .map { case (id, _, _) => id -> reg.lookupFunctionBuilder(id).get }
+      val injected = installed()
+      // registering over injected names must not replace them (Spark
+      // logs "replaced a previously registered function" when it does)
+      graft.functions.VectorFunctions.register(s)
+      graft.functions.VectorFunctions.register(s)
+      installed().zip(injected).foreach { case ((id, now), (_, before)) =>
+        assert(now eq before, s"register replaced $id")
+      }
+    } finally {
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
 }

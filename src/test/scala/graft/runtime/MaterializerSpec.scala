@@ -74,39 +74,6 @@ class MaterializerSpec extends SparkSpec {
     assert(incrOut == fullOut)
   }
 
-  test("legacy-layout crash (__old without live) recovers, then migrates to manifest") {
-    // a table a pre-manifest engine left behind: fixed dir, no pointer,
-    // crashed between its two swap renames
-    val dir = freshDir()
-    val mat = new Materializer(spark, dir)
-    val v1 = Seq(("k1", 1), ("k2", 2)).toDF("id", "v")
-    v1.write.parquet(s"$dir/t")
-    Files.move(java.nio.file.Paths.get(s"$dir/t"),
-      java.nio.file.Paths.get(s"$dir/t__old"))
-    val deadTmp = java.nio.file.Paths.get(s"$dir/t__tmp_dead")
-    Files.createDirectories(deadTmp)
-    val recovered = mat.readPrior("t")
-    assert(recovered.isDefined, "prior table must be restored from __old")
-    assert(recovered.get.as[(String, Int)].collect().toMap == Map("k1" -> 1, "k2" -> 2))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/t__old")))
-    // legacy tmp dirs are uniquely named per invocation, so recovery
-    // cannot tell a dead one from an in-flight one — it leaves them
-    assert(Files.exists(deadTmp), "recovery must not touch legacy tmp dirs")
-    // the next materialization reads the restored table as its prior and
-    // commits through the manifest, KEEPING the legacy dir one cycle for
-    // uncoordinated readers that resolved it
-    val next = mat.materialize("t", "id")(_ => Seq(("k2", 20)).toDF("id", "v"))
-      .as[(String, Int)].collect().toMap
-    assert(next == Map("k1" -> 1, "k2" -> 20))
-    assert(Files.exists(java.nio.file.Paths.get(s"$dir/t")),
-      "legacy dir must survive the first manifest commit")
-    mat.materialize("t", "id")(_ => Seq(("k3", 3)).toDF("id", "v"))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/t")),
-      "legacy dir must be GC'd by the second manifest commit")
-    val fin = mat.readPrior("t").get.as[(String, Int)].collect().toMap
-    assert(fin == Map("k1" -> 1, "k2" -> 20, "k3" -> 3))
-  }
-
   test("concurrent materializes of one model serialize: both upserts land, no clobber") {
     // two Materializer INSTANCES over the same warehouse (the shape two
     // engine entry points in one JVM produce): the JVM-global
@@ -141,18 +108,13 @@ class MaterializerSpec extends SparkSpec {
     assert(versions.size <= 2, s"version dirs not GC'd: $versions")
   }
 
-  test("crash-leftover __old: swap-lock reader + concurrent writer cannot deadlock") {
-    // regression: recover() fired INSIDE withSwapLock used to take the
-    // file-lock gate while holding the swap monitor — the inverse of the
-    // writer's gate → monitor order — so a reader and a writer meeting
-    // over a crash-leftover __old dir deadlocked. Now withSwapLock
-    // pre-recovers before the monitor and in-monitor recover is a no-op.
-    // Legacy layout (the only one recover repairs): built directly.
-    val dir = freshDir()
-    val mat = new Materializer(spark, dir)
-    Seq(("k1", 1)).toDF("id", "v").write.parquet(s"$dir/t")
-    Files.move(java.nio.file.Paths.get(s"$dir/t"),
-      java.nio.file.Paths.get(s"$dir/t__old"))
+  test("swap-lock reader + concurrent writer cannot deadlock") {
+    // lock order is writer mutex → file lock → swap monitor: a reader
+    // holding the swap monitor must read without touching the writer's
+    // locks, or a writer holding them and waiting on the monitor to
+    // flip the pointer closes a circular wait
+    val mat = new Materializer(spark, freshDir())
+    mat.materialize("t", "id")(_ => Seq(("k1", 1)).toDF("id", "v"))
     val v2 = Seq(("k2", 2)).toDF("id", "v")
     val readerIn = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
@@ -177,8 +139,8 @@ class MaterializerSpec extends SparkSpec {
     release.countDown()
     reader.join(60000); writer.join(60000)
     assert(!reader.isAlive && !writer.isAlive,
-      "reader/writer deadlocked over crash-leftover __old")
-    assert(readerRows == 1L, s"reader saw $readerRows rows of the recovered table")
+      "reader/writer deadlocked")
+    assert(readerRows == 1L, s"reader saw $readerRows rows of the pinned table")
     assert(writerDone)
     val end = mat.readPrior("t").get.as[(String, Int)].collect().toMap
     assert(end == Map("k1" -> 1, "k2" -> 2), end.toString)
@@ -200,14 +162,6 @@ class MaterializerSpec extends SparkSpec {
     // the next COMMIT does GC it (it is neither published nor new)
     mat.materialize("t", "id")(_ => Seq(("k2", 2)).toDF("id", "v"))
     assert(!Files.exists(inflight), "orphan version dir must be GC'd at commit")
-    // legacy stale __old beside a healthy legacy table IS cleaned on read
-    val dir2 = freshDir()
-    val mat2 = new Materializer(spark, dir2)
-    Seq(("k1", 1)).toDF("id", "v").write.parquet(s"$dir2/t")
-    val bak = java.nio.file.Paths.get(s"$dir2/t__old")
-    Files.createDirectories(bak)
-    mat2.exists("t")
-    assert(!Files.exists(bak), "stale __old beside a live legacy table must be dropped")
   }
 
   test("cross-process reader never observes a missing table across manifest commits") {

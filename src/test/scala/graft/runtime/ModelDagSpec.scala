@@ -1,21 +1,45 @@
 package graft.runtime
 
-import graft.SparkSpec
+import graft.{Graft, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
-/** DAG-level incremental semantics over the sf0.001 fixtures: a second run
-  * with no new data must leave every model's materialization unchanged
-  * (the watermark filters the whole input; upsert keeps prior rows).
+/** DAG-level incremental semantics of the reference's three models, run
+  * as [[Dag]] nodes (`Graft.models`) over the sf0.001 fixtures: a second
+  * run with no new data must leave every model's materialization
+  * unchanged (the watermark filters the whole input; upsert keeps prior
+  * rows), and the DataFrame and SQL surfaces must agree.
   */
 class ModelDagSpec extends SparkSpec {
 
-  test("full run then no-new-data rerun is a fixed point for all models") {
-    val dir = Files.createTempDirectory("graft-dag").toString
-    val sources = Sources(spark, "/root/testdata/sf0.001")
-    val logged = scala.collection.mutable.ArrayBuffer[String]()
-    val dag = new ModelDag(sources, new Materializer(spark, dir), logged += _)
+  private def sources(sf: String = "sf0.001") = Sources(spark, s"/root/testdata/$sf")
 
-    val first = dag.run().map { case (k, df) => k -> df.count() }
+  private def runDag(dir: String, sql: Boolean,
+                     log: String => Unit = _ => ()): Map[String, DataFrame] =
+    new Dag(new Materializer(spark, dir), Graft.models(sources(), sql, log)).run()
+
+  private def freshDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Each model's rows as a multiset of rendered rows. */
+  private def snap(out: Map[String, DataFrame]): Map[String, Map[String, Int]] =
+    out.map { case (k, df) =>
+      k -> df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
+        .groupBy(identity).map { case (r, v) => r -> v.length }
+    }
+
+  /** Each model's schema — the row snapshot renders values as strings,
+    * which hides type drift (INT vs BIGINT print alike).
+    */
+  private def schemas(out: Map[String, DataFrame]) =
+    out.map { case (k, df) => k -> df.schema }
+
+  test("full run then no-new-data rerun is a fixed point for all models") {
+    val dir = freshDir("graft-dag")
+    val logged = scala.collection.mutable.ArrayBuffer[String]()
+    def run() = runDag(dir, sql = false, logged += _)
+
+    val first = run().map { case (k, df) => k -> df.count() }
     assert(first.values.forall(_ > 0), s"empty model output: $first")
 
     // A5 — reference debug block (lead_activities_agg.sql:9-31): both
@@ -30,7 +54,7 @@ class ModelDagSpec extends SparkSpec {
     assert(userLine.matches(logged(1)), s"unexpected second debug line: ${logged(1)}")
     assert(firstLeadCount > 0)
 
-    val second = dag.run().map { case (k, df) => k -> df.count() }
+    val second = run().map { case (k, df) => k -> df.count() }
     assert(second == first, s"rerun drifted: $first vs $second")
 
     // incremental rerun: the lead count is watermarked (date > max
@@ -46,29 +70,36 @@ class ModelDagSpec extends SparkSpec {
   }
 
   test("SQL-surface DAG run is row-identical to the DataFrame DAG run, incl. incremental") {
-    val sources = Sources(spark, "/root/testdata/sf0.001")
-    val dfDag = new ModelDag(sources,
-      new Materializer(spark, Files.createTempDirectory("graft-dag-df").toString), _ => ())
-    val sqlDag = new ModelDag(sources,
-      new Materializer(spark, Files.createTempDirectory("graft-dag-sql").toString), _ => ())
+    val dfDir = freshDir("graft-dag-df")
+    val sqlDir = freshDir("graft-dag-sql")
+    def both() = (runDag(dfDir, sql = false), runDag(sqlDir, sql = true))
 
-    def snap(out: Map[String, org.apache.spark.sql.DataFrame]): Map[String, Map[String, Int]] =
-      out.map { case (k, df) =>
-        k -> df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
-          .groupBy(identity).map { case (r, v) => r -> v.length }
-      }
-
-    assert(snap(dfDag.run()) == snap(sqlDag.runSql()), "first-run outputs diverged")
+    val (df1, sql1) = both()
+    assert(snap(df1) == snap(sql1), "first-run outputs diverged")
+    assert(schemas(df1) == schemas(sql1), "first-run schemas diverged")
     // rerun = incremental through each surface's {{ this }} seam
-    assert(snap(dfDag.run()) == snap(sqlDag.runSql()), "incremental outputs diverged")
+    val (df2, sql2) = both()
+    assert(snap(df2) == snap(sql2), "incremental outputs diverged")
+    assert(schemas(df2) == schemas(sql2), "incremental schemas diverged")
+  }
+
+  test("a warehouse first built through the SQL surface refreshes through the DataFrame surface") {
+    val mixed = freshDir("graft-dag-mixed")
+    val dfOnly = freshDir("graft-dag-dfonly")
+    runDag(mixed, sql = true)
+    runDag(dfOnly, sql = false)
+    // the DataFrame refresh upserts into SQL-written tables: every
+    // column type must match, or on_schema_change=ignore refuses the batch
+    val refreshed = runDag(mixed, sql = false)
+    val expected = runDag(dfOnly, sql = false)
+    assert(snap(refreshed) == snap(expected), "SQL-first warehouse refreshed differently")
+    assert(schemas(refreshed) == schemas(expected))
   }
 
   test("daily model output feeds lead model spend enrichment") {
     // sf0.01: at sf0.001 the (campaign, date) spend join legitimately has
     // zero matches (verified against the DuckDB oracle — 0 of 27 rows)
-    val dir = Files.createTempDirectory("graft-dag2").toString
-    val sources = Sources(spark, "/root/testdata/sf0.01")
-    val out = new ModelDag(sources, new Materializer(spark, dir)).run()
+    val out = Graft.run(spark, "/root/testdata/sf0.01", freshDir("graft-dag2"))
     val leads = out("lead_activities_agg")
     // some leads picked up a non-zero spend_per_visit through the J3 join
     assert(leads.filter(leads("mkt_spend") > 0).count() > 0)

@@ -141,27 +141,6 @@ class WindowCommitSpec extends SparkSpec {
       .collect().toSet == days.map(_.toString).toSet)
   }
 
-  test("pre-manifest fixed-dir table migrates losslessly; legacy dir stays whole via links") {
-    val dir = freshDir()
-    // hand-build the LEGACY layout: partitioned parquet + _SUCCESS at
-    // the fixed model dir, no pointer
-    val legacy = Paths.get(dir, "m")
-    (days.flatMap(d => (0 until 4).map(i => (java.sql.Date.valueOf(d), i, 1))))
-      .toDF("event_date", "i", "gen")
-      .write.partitionBy("event_date").parquet(legacy.toString)
-    val mat = new Materializer(spark, dir)
-    // first windowed commit rebuilds ONE day; the untouched days migrate
-    val t = mat.rebuildMicrobatchWindow("m", "event_date", days(1))(window(2, 5))
-    assert(t.count() == 4 + 5 + 4)
-    // migration left symlinks in the legacy dir, so a crash BEFORE the
-    // publish would have left the legacy table complete
-    days.filter(_ != days(1)).foreach { d =>
-      val e = legacy.resolve(s"event_date=$d")
-      assert(Files.isSymbolicLink(e), s"$e must be a migration link")
-      assert(Files.exists(e.toRealPath()), "link target must be intact")
-    }
-  }
-
   test("windowed commit over a prior KEYED table refuses loudly instead of dropping rows") {
     val mat = new Materializer(spark, freshDir())
     mat.materialize("m", "id")(_ => Seq(("k1", 1), ("k2", 2)).toDF("id", "v"))
@@ -169,46 +148,6 @@ class WindowCommitSpec extends SparkSpec {
       mat.rebuildMicrobatchWindow("m", "event_date", days(0))(window(1, 3))
     }
     assert(e.getMessage.contains("plain keyed table"), e.getMessage)
-  }
-
-  test("a migration that crashed between rename and re-link heals: the window is not dropped") {
-    val dir = freshDir()
-    val legacy = Paths.get(dir, "m")
-    (days.flatMap(d => (0 until 4).map(i => (java.sql.Date.valueOf(d), i, 1))))
-      .toDF("event_date", "i", "gen")
-      .write.partitionBy("event_date").parquet(legacy.toString)
-    // simulate the exact crash state: day 1's real dir renamed into
-    // windata (intent marker stamped) but the legacy re-link never ran —
-    // without healing, the next commit's carry-forward silently drops
-    // the day and GC deletes its bytes
-    val windata = Paths.get(dir, "m__windata")
-    Files.createDirectories(windata)
-    val entry = s"event_date=${days(0)}__v1"
-    Files.createFile(windata.resolve(s"__mig_$entry"))
-    Files.move(legacy.resolve(s"event_date=${days(0)}"), windata.resolve(entry))
-    val mat = new Materializer(spark, dir)
-    val t = mat.rebuildMicrobatchWindow("m", "event_date", days(1))(window(2, 5))
-    assert(t.filter($"event_date" === java.sql.Date.valueOf(days(0))).count() == 4,
-      "crashed-migration window must be healed back into the table")
-    assert(t.count() == 4 + 5 + 4)
-    val names = Option(windata.toFile.list()).toSeq.flatten
-    assert(!names.exists(_.startsWith("__mig_")), s"marker must be consumed: $names")
-    assert(Files.exists(windata.resolve(entry)), "healed window's bytes must survive GC")
-  }
-
-  test("marker stamped but rename not yet done: heal is a no-op beyond dropping the marker") {
-    val dir = freshDir()
-    val legacy = Paths.get(dir, "m")
-    (days.flatMap(d => (0 until 4).map(i => (java.sql.Date.valueOf(d), i, 1))))
-      .toDF("event_date", "i", "gen")
-      .write.partitionBy("event_date").parquet(legacy.toString)
-    val windata = Paths.get(dir, "m__windata")
-    Files.createDirectories(windata)
-    Files.createFile(windata.resolve(s"__mig_event_date=${days(0)}__v1"))
-    val mat = new Materializer(spark, dir)
-    val t = mat.rebuildMicrobatchWindow("m", "event_date", days(1))(window(2, 5))
-    assert(t.count() == 4 + 5 + 4)
-    assert(!Option(windata.toFile.list()).toSeq.flatten.exists(_.startsWith("__mig_")))
   }
 
   test("an UNMARKED windata orphan (failed fresh write) is swept, never resurrected") {

@@ -644,9 +644,9 @@ class StreamingSpec extends SparkSpec {
       in.addData((1L, "alpha beta"), (2L, "gamma"), (3L, "ALPHA   beta"))
       q.processAllAvailable()
       assert(corpus == Set(1L, 2L), corpus.toString)
-      assert(frag.fragmentCount() == 1, "default must commit as fragments")
+      assert(frag.fragmentCount() == 1, "the sink must commit as fragments")
       assert(!mat.exists("corpus"),
-        "default must not pay the Materializer whole-table rewrite")
+        "the sink must not pay a Materializer whole-table rewrite")
       // batch 2: doc 4 duplicates the MATERIALIZED corpus, doc 5 is new
       in.addData((4L, "alpha beta"), (5L, "delta"))
       q.processAllAvailable()
@@ -658,28 +658,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(corpus == Set(1L, 2L, 5L), corpus.toString)
       assert(frag.fragmentCount() == 2, "replay must not write a fragment")
-    } finally q.stop()
-  }
-
-  test("corpus ingest sink SEEDS the fragment store from a pre-existing Materializer table") {
-    implicit val sqlCtx = spark.sqlContext
-    val mat = new graft.runtime.Materializer(spark,
-      java.nio.file.Files.createTempDirectory("ingest_seed").toString)
-    // a corpus ingested under the legacy whole-table sink…
-    mat.materialize("corpus", "doc_id")(_ =>
-      Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text"))
-    // …keeps its rows (and its dedup authority) when the deployment
-    // flips to the fragmented default
-    val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.corpusIngestSink(
-      in.toDF().toDF("doc_id", "text"), mat, "corpus").start()
-    try {
-      in.addData((4L, "alpha beta"), (5L, "delta"))
-      q.processAllAvailable()
-      val corpus = mat.fragmented("corpus", "doc_id").read().get
-        .select("doc_id").as[Long].collect().toSet
-      assert(corpus == Set(1L, 2L, 5L),
-        s"seeded corpus must absorb the legacy table's duplicates: $corpus")
     } finally q.stop()
   }
 
@@ -743,31 +721,6 @@ class StreamingSpec extends SparkSpec {
       in.addData((3L, "abc now long enough"))
       q.processAllAvailable()
       assert(corpus == Set(1L, 3L, 4L), corpus.toString)
-    } finally q.stop()
-  }
-
-  test("opt-in wholeTableRewrite=true keeps the legacy Materializer form, compaction included") {
-    implicit val sqlCtx = spark.sqlContext
-    val mat = new graft.runtime.Materializer(spark,
-      java.nio.file.Files.createTempDirectory("ingest_compact").toString)
-    def partFiles: Int = new java.io.File(mat.outPath("cc"))
-      .listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    def corpus: Set[Long] = mat.readPrior("cc")
-      .map(_.select("doc_id").as[Long].collect().toSet).getOrElse(Set.empty)
-    val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.corpusIngestSink(
-      in.toDF().toDF("doc_id", "text").repartition(4), mat, "cc",
-      compactEvery = 1L, compactTargetFiles = 1, wholeTableRewrite = true).start()
-    try {
-      in.addData((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
-      q.processAllAvailable()
-      in.addData((4L, "delta"), (5L, "epsilon"))
-      q.processAllAvailable()
-      in.addData((6L, "zeta"))
-      q.processAllAvailable()
-      assert(corpus == Set(1L, 2L, 3L, 4L, 5L, 6L), corpus.toString)
-      assert(partFiles == 1,
-        s"compaction cadence failed to bound fragmentation: $partFiles files")
     } finally q.stop()
   }
 
