@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
@@ -51,6 +52,13 @@ import java.nio.charset.StandardCharsets
   * the `"errors"` map in the output JSON (name -> exception
   * class+message) and excluded from the per-query timings, so a
   * regression cannot masquerade as a speedup.
+  *
+  * Every timed row also carries its Spark breakdown for the min pass in
+  * the main line's `"layers"` map (jobs, stages, tasks, executor task
+  * time, shuffle and input MB, frame-build time, `par_eff`;
+  * [[BenchLines.layerFields]]), so "where did the time go" is answered
+  * by the artifact itself: many small jobs and one shuffle-bound job
+  * read the same in a single number but not here.
   */
 object Bench {
 
@@ -289,6 +297,40 @@ object Bench {
     math.round(t * 10000.0) / 10000.0
   }
 
+  /** The per-row Spark breakdown: one listener, registered for the whole
+    * run, whose counters [[take]] reads and resets after draining the
+    * listener bus — so each pass's snapshot holds exactly the events that
+    * pass caused, with no sleep-and-hope delay. Drains happen outside the
+    * timed window.
+    */
+  private final class RowProbe(sc: org.apache.spark.SparkContext) extends SparkListener {
+    private var jobs, stages, tasks, runMs, shufR, shufW, input = 0L
+    sc.addSparkListener(this)
+
+    def take(buildS: Double, wallS: Double): BenchLines.RowLayers = {
+      org.apache.spark.GraftListenerBus.drain(sc)
+      synchronized {
+        val out = BenchLines.RowLayers(buildS, wallS, jobs, stages, tasks,
+          runMs, shufR, shufW, input)
+        jobs = 0; stages = 0; tasks = 0; runMs = 0; shufR = 0; shufW = 0; input = 0
+        out
+      }
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      tasks += 1
+      Option(e.taskMetrics).foreach { m =>
+        runMs += m.executorRunTime
+        shufR += m.shuffleReadMetrics.totalBytesRead
+        shufW += m.shuffleWriteMetrics.bytesWritten
+        input += m.inputMetrics.bytesRead
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // PRE-FLIGHT idle certification (VERDICT r12 #2): an 11-minute pass
     // matrix on a loaded host produces a timing artifact the round then
@@ -370,25 +412,35 @@ object Bench {
     val loadStart = load1()
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val spreads = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val layers = scala.collection.mutable.LinkedHashMap[String, BenchLines.RowLayers]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    val probe = new RowProbe(spark.sparkContext)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
         val passes = (1 to nPasses).map { _ =>
+          probe.take(0.0, 0.0) // drop what earlier work left on the bus
           val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          val df = fn(spark, sfDir)
+          val built = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val t1 = System.nanoTime()
+          probe.take((built - t0) / 1e9, (t1 - t0) / 1e9)
         }
-        timings(name) = passes.min
+        val best = passes.minBy(_.wallS)
+        val walls = passes.map(_.wallS)
+        timings(name) = best.wallS
+        layers(name) = best
         spreads(name) = math.round(
-          (passes.max - passes.min) / passes.min * 1000.0) / 1000.0
+          (walls.max - walls.min) / walls.min * 1000.0) / 1000.0
       } catch {
         case e: Throwable =>
           errors(name) = (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)).take(300)
       }
       hygiene()
     }
+    spark.sparkContext.removeSparkListener(probe)
     // SETTLE before the end stamp (r16, amended r17 per ADVICE): load1
     // is a ~1-minute EWMA, so the bench's OWN local[32] final rows
     // leave it elevated for tens of seconds after the work stops — the
@@ -420,16 +472,6 @@ object Bench {
       canaryEnd <= 1.15 * canaryStart && ioCanaryEnd <= 1.15 * ioCanaryStart &&
         decodeCanaryEnd <= 1.15 * decodeCanaryStart
     val loadEnd = if (canariesClean) loadEndSettled else loadEndRaw
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
-    val qs = timings.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val sp = spreads.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val hostCpus = Runtime.getRuntime.availableProcessors
     val host = s"""{"load1_start":$loadStart,"load1_end":$loadEnd,""" +
       s""""load1_end_raw":$loadEndRaw,"load1_end_settled":$loadEndSettled,""" +
@@ -563,21 +605,21 @@ object Bench {
     // row; the decode axis additionally for media rows). Factors are 1.0
     // when the ref predates canaries or the host is at/above ref
     // throughput.
-    val flags = timings.flatMap { case (name, t) =>
+    val flags = timings.toSeq.flatMap { case (name, t) =>
       refTimes.get(name).collect {
         case ref if ref > 0 && t / rowFactor(name) > 1.3 * ref =>
+          val spread = spreads.getOrElse(name, 0.0)
           val verdict =
             if (contended) "contention"
             else if (t < 1.0) "subsecond"
-            else if (spreads.getOrElse(name, 0.0) > 0.5) "noisy"
+            else if (spread > 0.5) "noisy"
             else "real"
           println(f"[bench] flag $name: $t%.2fs vs ref $ref%.2fs " +
             f"(${t / ref}%.1fx raw, ${t / rowFactor(name) / ref}%.1fx normalized at factor ${rowFactor(name)}%.3f) " +
-            f"spread=${spreads.getOrElse(name, 0.0)}%.3f -> $verdict")
-          name -> verdict
+            f"spread=$spread%.3f -> $verdict")
+          BenchLines.Flag(name, t, ref, spread, verdict)
       }
     }
-    val fl = flags.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     // flagged rows WITH magnitudes (VERDICT r14 task 7), ranked so the
     // verdicts a human must adjudicate come first: real, then noisy,
     // then contention, then subsecond; within a verdict, worst
@@ -587,28 +629,14 @@ object Bench {
     // grew the summary past the driver's 2000-byte tail window and
     // truncated away the run's total/host/canary — the r14 fix for one
     // lost magnitude cost the whole run's summary).
-    val flaggedRanked: Seq[(String, String)] = flags.toSeq.sortBy {
-      case (name, verdict) =>
-        (BenchLines.verdictRank(verdict),
-         -(timings(name) / math.max(refTimes.getOrElse(name, 0.0), 1e-9)))
-    }
-    def flaggedJson(entries: Seq[(String, String)]): String =
-      entries.map { case (name, verdict) =>
-        s"""{"row":${jstr(name)},"value":${timings(name)},""" +
-        s""""ref":${refTimes.getOrElse(name, 0.0)},""" +
-        s""""spread":${spreads.getOrElse(name, 0.0)},"verdict":${jstr(verdict)}}"""
-      }.mkString("[", ",", "]")
-    val flaggedArr = flaggedJson(flaggedRanked)
-    val flaggedCapped = flaggedJson(flaggedRanked.take(BenchLines.SummaryFlagCap))
-    val flaggedDropped = math.max(0, flaggedRanked.size - BenchLines.SummaryFlagCap)
     val total = timings.values.sum
-    // field order is deliberate: the noise instruments and verdicts come
-    // BEFORE the (large) queries map so tail truncation cannot strip them
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":${jstr(sfDir)},""" +
-      s""""host":$host,"host_factor":$hostFactor,"decode_factor":$decodeFactor,""" +
-      s""""ref":${jstr(if (refTimes.isEmpty) "" else refPath)},""" +
-      s""""flags":$fl,"flagged":$flaggedArr,"errors":$errs,"spread":$sp,"queries":$qs}"""
+    val run = BenchLines.Run(
+      total = total, sf = sfDir, host = host, contended = contended,
+      hostFactor = hostFactor, decodeFactor = decodeFactor,
+      ref = if (refTimes.isEmpty) "" else refPath, flags = flags,
+      errors = errors.toSeq, spreads = spreads.toSeq, timings = timings.toSeq,
+      layers = layers.toSeq, cpus = cpus.toInt)
+    val line = BenchLines.mainLine(run)
     // Tail-safety, for real this time (VERDICT r11 finding #1): the r10
     // fix put the instruments BEFORE the queries map, but the driver
     // keeps the TAIL of stdout — BENCH_r11.json lost host/flags/spread.
@@ -618,14 +646,7 @@ object Bench {
     // explicit flagged_dropped count, and a THIRD size-bounded line
     // follows so even a pathological flag storm cannot starve the tail
     // window of the run's totals.
-    val summaryLine =
-      s"""{"metric":"summary","total":$total,"sf":${jstr(sfDir)},""" +
-      s""""host":$host,"contended":$contended,"host_factor":$hostFactor,""" +
-      s""""decode_factor":$decodeFactor,""" +
-      s""""ref":${jstr(if (refTimes.isEmpty) "" else refPath)},""" +
-      s""""flags":$fl,"flagged":$flaggedCapped,""" +
-      s""""flagged_dropped":$flaggedDropped,"errors_count":${errors.size},""" +
-      s""""spread_max":${if (spreads.isEmpty) 0.0 else spreads.values.max}}"""
+    val summaryLine = BenchLines.summaryLine(run)
     // The LAST line is the guaranteed carrier (VERDICT r15 task 1): a
     // fixed-field, byte-bounded digest of everything adjudication needs
     // — total, host stamps, canary pair, contended verdict, flag counts,
@@ -639,12 +660,9 @@ object Bench {
       ioCanaryStart = ioCanaryStart, ioCanaryEnd = ioCanaryEnd,
       decodeCanaryStart = decodeCanaryStart, decodeCanaryEnd = decodeCanaryEnd,
       loadStart = loadStart, loadEnd = loadEnd, loadEndRaw = loadEndRaw,
-      flagCounts = flags.values.groupBy(identity).map { case (k, v) => k -> v.size },
-      worstReal = flaggedRanked.headOption.filter(_._2 == "real").map {
-        case (name, _) =>
-          (name, timings(name), refTimes.getOrElse(name, 0.0),
-           spreads.getOrElse(name, 0.0))
-      })
+      flagCounts = flags.groupBy(_.verdict).map { case (k, v) => k -> v.size },
+      worstReal = BenchLines.ranked(flags).headOption.filter(_.verdict == "real")
+        .map(f => (f.row, f.value, f.ref, f.spread)))
     Files.write(
       Paths.get("bench_out.json"),
       (line + "\n").getBytes(StandardCharsets.UTF_8),

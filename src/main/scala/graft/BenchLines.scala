@@ -11,7 +11,9 @@ package graft
   *
   * The protocol is three stdout lines, least-durable first:
   *   1. `{"metric":"total",...}` — everything, including the per-row
-  *      maps; also written to `bench_out.json` (file-backed, safe).
+  *      maps (timings, spreads, and each row's Spark breakdown in
+  *      `"layers"`, see [[layerFields]]); also written to
+  *      `bench_out.json` (file-backed, safe).
   *   2. `{"metric":"summary",...}` — per-row maps dropped, flagged
   *      array CAPPED at [[SummaryFlagCap]] (real-verdict rows first)
   *      with an explicit `flagged_dropped` count.
@@ -62,6 +64,93 @@ object BenchLines {
                 hostFactor: Double, decodeFactor: Double): Double =
     if (families.get(name).contains("media")) math.max(hostFactor, decodeFactor)
     else hostFactor
+
+  /** One row's Spark breakdown over its min pass, in the listener's
+    * units: `buildS` is frame construction (the query function's call,
+    * including any eager work it does), `wallS` the whole pass.
+    */
+  final case class RowLayers(
+      buildS: Double, wallS: Double, jobs: Long, stages: Long, tasks: Long,
+      executorRunMs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+      inputBytes: Long)
+
+  /** A row whose min exceeded 1.3× its reference, with its magnitudes. */
+  final case class Flag(row: String, value: Double, ref: Double,
+                        spread: Double, verdict: String)
+
+  /** Everything the main and summary lines report. `host` is the
+    * already-encoded host-stamp object; `flags` are in row order; `cpus`
+    * is the run's Spark core count (the `par_eff` denominator).
+    */
+  final case class Run(
+      total: Double, sf: String, host: String, contended: Boolean,
+      hostFactor: Double, decodeFactor: Double, ref: String,
+      flags: Seq[Flag], errors: Seq[(String, String)],
+      spreads: Seq[(String, Double)], timings: Seq[(String, Double)],
+      layers: Seq[(String, RowLayers)], cpus: Int)
+
+  /** Flags in adjudication order: verdict rank, then worst
+    * ratio-to-reference first.
+    */
+  def ranked(flags: Seq[Flag]): Seq[Flag] =
+    flags.sortBy(f => (verdictRank(f.verdict), -(f.value / math.max(f.ref, 1e-9))))
+
+  /** One row's layer fields. `par_eff` is executor task time over the
+    * pass's core-seconds (wall × cpus): a serial chain of one-task
+    * stages reads about 1/cpus, a task storm many tasks at low par_eff.
+    */
+  def layerFields(l: RowLayers, cpus: Int): String = {
+    def mb(b: Long) = r3(b / 1048576.0)
+    val coreS = l.wallS * cpus
+    val parEff = if (coreS > 0) r4(l.executorRunMs / 1000.0 / coreS) else 0.0
+    s"""{"jobs":${l.jobs},"stages":${l.stages},"tasks":${l.tasks},""" +
+    s""""executor_run_s":${r3(l.executorRunMs / 1000.0)},""" +
+    s""""shuffle_read_mb":${mb(l.shuffleReadBytes)},""" +
+    s""""shuffle_write_mb":${mb(l.shuffleWriteBytes)},""" +
+    s""""input_mb":${mb(l.inputBytes)},"build_s":${r3(l.buildS)},""" +
+    s""""par_eff":$parEff}"""
+  }
+
+  private def jmap[V](m: Seq[(String, V)])(enc: V => String): String =
+    m.map { case (k, v) => jstr(k) + ":" + enc(v) }.mkString("{", ",", "}")
+
+  private def flaggedArray(flags: Seq[Flag]): String =
+    flags.map { f =>
+      s"""{"row":${jstr(f.row)},"value":${f.value},"ref":${f.ref},""" +
+      s""""spread":${f.spread},"verdict":${jstr(f.verdict)}}"""
+    }.mkString("[", ",", "]")
+
+  private def flagsMap(flags: Seq[Flag]): String =
+    jmap(flags.map(f => f.row -> f.verdict))(jstr)
+
+  /** The full line. Field order is deliberate: the noise instruments and
+    * verdicts come BEFORE the (large) per-row maps, so a truncated
+    * capture keeps them for exactly the rows whose timings survived.
+    */
+  def mainLine(r: Run): String =
+    s"""{"metric":"total","value":${r.total},"unit":"sec","sf":${jstr(r.sf)},""" +
+    s""""host":${r.host},"host_factor":${r.hostFactor},"decode_factor":${r.decodeFactor},""" +
+    s""""ref":${jstr(r.ref)},"flags":${flagsMap(r.flags)},""" +
+    s""""flagged":${flaggedArray(ranked(r.flags))},""" +
+    s""""errors":${jmap(r.errors)(jstr)},"spread":${jmap(r.spreads)(_.toString)},""" +
+    s""""queries":${jmap(r.timings)(_.toString)},""" +
+    s""""layers":${jmap(r.layers)(layerFields(_, r.cpus))}}"""
+
+  /** The compact line printed after the main one: per-row maps dropped,
+    * flagged array capped at [[SummaryFlagCap]] (real verdicts first)
+    * with an explicit `flagged_dropped` count.
+    */
+  def summaryLine(r: Run): String = {
+    val flagged = ranked(r.flags)
+    s"""{"metric":"summary","total":${r.total},"sf":${jstr(r.sf)},""" +
+    s""""host":${r.host},"contended":${r.contended},"host_factor":${r.hostFactor},""" +
+    s""""decode_factor":${r.decodeFactor},"ref":${jstr(r.ref)},""" +
+    s""""flags":${flagsMap(r.flags)},""" +
+    s""""flagged":${flaggedArray(flagged.take(SummaryFlagCap))},""" +
+    s""""flagged_dropped":${math.max(0, flagged.size - SummaryFlagCap)},""" +
+    s""""errors_count":${r.errors.size},""" +
+    s""""spread_max":${if (r.spreads.isEmpty) 0.0 else r.spreads.map(_._2).max}}"""
+  }
 
   private def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
   private def r4(v: Double): Double = math.round(v * 10000.0) / 10000.0

@@ -46,7 +46,7 @@ object Soak {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // AQE off: the deployment tuning for high-frequency SMALL-batch
     // ingest — AQE materializes every tiny exchange as its own
-    // synchronous stage, measured (BandedProfileSub, r12) as ~2x
+    // synchronous stage, measured (r12, per-trigger listener counts) as ~2x
     // jobs/trigger and +30% trigger latency on 250-doc batches with
     // zero re-planning benefit at that size. Recorded in the artifact
     // ("aqe": false); large maintenance ops (compaction, drains) are

@@ -102,9 +102,9 @@ object IngestOps {
   /** (doc_id, toks, sig) MinHash signature frame over a document frame —
     * the persistable LSH index of a corpus. This is what the streaming
     * ingest sink materializes as its `<model>__sigs` side-table
-    * ([[graft.streaming.StreamingOps.corpusIngestNearDupSink]]) so each
-    * micro-batch checks candidates against STORED signatures instead of
-    * re-signaturing the corpus text. `hotShingles` is a PINNED stopword
+    * ([[graft.streaming.StreamingOps.corpusIngestNearDupFragmentedSink]])
+    * so each micro-batch checks candidates against STORED signatures
+    * instead of re-signaturing the corpus text. `hotShingles` is a PINNED stopword
     * list (see [[appendDedupNearDup]]'s `maxDocFreqRatio` for the
     * derived-per-ingest form): stored signatures bake the list in, so an
     * index and every batch checked against it must share one list.
@@ -138,9 +138,9 @@ object IngestOps {
                                 hotShingles: Seq[String]): (DataFrame, DataFrame) = {
     val rows = numHashes / bands
     // drop signature-less rows (empty toks — the streaming side-table's
-    // convergence TOMBSTONES, see corpusIngestNearDupSink): they carry no
-    // dedup signal, and a degenerate empty-set signature would collide in
-    // every band
+    // convergence TOMBSTONES, see corpusIngestNearDupFragmentedSink): they
+    // carry no dedup signal, and a degenerate empty-set signature would
+    // collide in every band
     val exSigs = existingSigs.filter(size(col("toks")) > 0)
     val exact = DedupOps.dedupExact(incoming, textCol, idCol)
     // one signature pass serves both the within-batch pair search and the

@@ -308,7 +308,6 @@ object StructGate {
       .crossJoin(dropped.select(col(idCol)).join(witnessed, Seq(idCol), "left_anti")
         .agg((count(lit(1)) === 0).as("dropped_have_witness")))
     // evaluate now (1 flag row) so the pins release with the call
-    if (devLazyGateR11) return gate // A/B reproduction arm ONLY
     val rows = gate.collect()
     val out = sv.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), gate.schema)
@@ -318,14 +317,6 @@ object StructGate {
     pT.unpersist()
     out
   }
-
-  /** DEV-ONLY (graft.dev.GateAbSub): reproduce the r11 pre-ADVICE-fix
-    * gate — return the flag row LAZILY with every pin leaked, so a
-    * min-of-N timing loop's later passes read pass 1's cached blocks
-    * (the measurement r12's adjudication corrected). Never set outside
-    * the A/B harness; production semantics require the eager path.
-    */
-  @volatile private[graft] var devLazyGateR11: Boolean = false
 
   /** Constant-true one-row oracle matching the pair gates' column set. */
   def pairGateOracle(metricFlag: String,

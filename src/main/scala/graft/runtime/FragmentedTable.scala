@@ -243,8 +243,8 @@ final class FragmentedTable(spark: SparkSession, baseDir: String,
     * fragment's own read-back schema, so it matches the bytes exactly)
     * is passed as the user schema: parquet then skips footer-read
     * schema inference, which otherwise costs one Spark JOB per fragment
-    * per read — measured as the dominant term of the banded ingest
-    * probe (~90 jobs/trigger, r12 BandedProfileSub). Unparseable DDL
+    * per read — measured (r12) as the dominant term of a banded ingest
+    * trigger's ~90 jobs. Unparseable DDL
     * (none is expected — toDDL round-trips) falls back to inference.
     */
   private def defaultFrame(e: FragEntry): DataFrame = {

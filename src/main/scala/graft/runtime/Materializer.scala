@@ -444,26 +444,6 @@ final class Materializer(spark: SparkSession, baseDir: String,
       gcWindowData(model)
     }
 
-  /** Small-file compaction: rewrite the model's CURRENT rows into
-    * `targetFiles` files through the same version-dir + pointer-flip
-    * commit as any materialize. The streaming sinks append one upsert
-    * per micro-batch, so a long-running ingest accumulates
-    * one-fragment-per-trigger tables — the operational small-files
-    * problem; periodic compaction restores scan efficiency without
-    * changing a row. `coalesce` (not repartition) keeps the rewrite
-    * narrow — a read + write, no shuffle. Readers are never blocked:
-    * they resolve through the pointer, and the superseded version obeys
-    * the usual keep-one-generation GC. No-op if the model doesn't exist.
-    */
-  def compact(model: String, targetFiles: Int): Unit = {
-    require(targetFiles > 0, s"targetFiles must be positive: $targetFiles")
-    writerLockFor(model).synchronized { withFileLock(model) {
-      readPrior(model).foreach { cur =>
-        commitVersion(model, cur.coalesce(targetFiles))
-      }
-    } }
-  }
-
   /** Key-level deletion through the standard versioned commit — the
     * GDPR / right-to-be-forgotten maintenance op a long-lived corpus
     * table needs: rows matching `predicate` are REMOVED from the

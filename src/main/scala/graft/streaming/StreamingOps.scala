@@ -156,8 +156,9 @@ object StreamingOps {
     * against the ALREADY-INGESTED corpus (Bloom-routed,
     * [[graft.ext.IngestOps.appendDedupExact]] — the corpus is scanned,
     * never repartitioned), then its survivors land as one new fragment
-    * of the [[graft.runtime.FragmentedTable]] `model` in `mat`'s
-    * warehouse ([[corpusIngestFragmentedSink]]'s body). foreachBatch is
+    * of the fragment store `frag` (O(batch) writes — the cost profile
+    * a high-frequency ingest of a large corpus needs; open one over a
+    * warehouse with `mat.fragmented(model, "doc_id")`). foreachBatch is
     * the stream↔external-table bridge: restarts re-dedup against
     * whatever actually landed, so a REPLAYED micro-batch dedups against
     * its own previous append and writes nothing.
@@ -174,18 +175,6 @@ object StreamingOps {
     * with the checkpoint); this holds it in the table itself —
     * unbounded corpus, restart-safe, at the cost of a corpus scan per
     * micro-batch (amortized by the Bloom route).
-    */
-  def corpusIngestSink(docs: DataFrame, mat: Materializer,
-                       model: String, compactEvery: Long = 0L): DataStreamWriter[Row] =
-    corpusIngestFragmentedSink(docs, mat.fragmented(model, "doc_id"), compactEvery)
-
-  /** [[corpusIngestSink]] over any fragment store: each trigger WRITES
-    * only its surviving batch as a new fragment (O(batch)) — the cost
-    * profile a high-frequency ingest of a large corpus needs, trading
-    * bounded read amplification that the `compactEvery` cadence folds
-    * away. Replay
-    * stays idempotent (a redelivered batch's rows dedup against their
-    * own previous fragment and the empty survivor set writes nothing).
     */
   def corpusIngestFragmentedSink(docs: DataFrame,
                                  frag: graft.runtime.KeyedFragmentStore,
@@ -256,15 +245,22 @@ object StreamingOps {
         ()
     }
 
-  /** [[corpusIngestQuarantineSink]] over [[graft.runtime.FragmentedTable]]s:
-    * the same validate → dead-letter → exact-dedup split, but BOTH the
-    * corpus and the `__rejects` quarantine commit as O(batch) fragments
-    * instead of whole-table rewrites. Replay stays idempotent on both
-    * sides: a redelivered batch's rejects upsert their own doc_ids into
-    * their previous fragment's keys (last-writer-wins, identical rows),
-    * and its valid rows content-dedup to an empty survivor set that
-    * writes nothing. `compactEvery` folds read amplification on the
-    * usual cadence.
+  /** [[corpusIngestFragmentedSink]] with a DEAD-LETTER split: each
+    * micro-batch is validated against `checks` (name → predicate that
+    * must HOLD; a NULL predicate result counts as failing, the dbt-test
+    * convention) BEFORE dedup. Rows failing any check land in
+    * `rejectsFrag` (conventionally `<model>__rejects`) carrying the
+    * FIRST failing check's name as `reject_reason`; only valid rows
+    * continue into the exact-dedup ingest. Both stores commit as
+    * O(batch) fragments. Replay stays idempotent on both sides: a
+    * redelivered batch's rejects upsert their own doc_ids into their
+    * previous fragment's keys (last-writer-wins, identical rows), and
+    * its valid rows content-dedup to an empty survivor set that writes
+    * nothing. The quarantine is a queryable TABLE, not a log line — ops
+    * inspect it, fix upstream, re-ingest (fixed ids upsert into the
+    * corpus), expire it. Same one-stream-per-model and
+    * unique-ids-within-a-batch contracts as the other ingest sinks;
+    * `compactEvery` folds read amplification on the usual cadence.
     */
   def corpusIngestQuarantineFragmentedSink(docs: DataFrame,
                                            frag: graft.runtime.KeyedFragmentStore,
@@ -379,36 +375,15 @@ object StreamingOps {
     }
   }
 
-  /** [[corpusIngestSink]] with a DEAD-LETTER split: each micro-batch is
-    * validated against `checks` (name → predicate that must HOLD; a NULL
-    * predicate result counts as failing, the dbt-test convention) BEFORE
-    * dedup. Rows failing any check land in `<model>__rejects` carrying
-    * the FIRST failing check's name as `reject_reason`; only valid rows
-    * continue into the exact-dedup ingest. Both tables commit as
-    * O(batch) fragments ([[corpusIngestQuarantineFragmentedSink]]'s
-    * body). A replayed micro-batch is idempotent on BOTH sides: its rejects upsert their own ids, its
-    * valid rows content-dedup against their previous append. The
-    * quarantine is a queryable TABLE, not a log line — ops inspect it,
-    * fix upstream, re-ingest (fixed ids upsert into the corpus), expire
-    * it. Same one-stream-per-model and unique-ids-within-a-batch
-    * contracts as the other ingest sinks.
-    */
-  def corpusIngestQuarantineSink(docs: DataFrame, mat: Materializer, model: String,
-                                 checks: Seq[(String, org.apache.spark.sql.Column)],
-                                 compactEvery: Long = 0L): DataStreamWriter[Row] = {
-    require(checks.nonEmpty, "at least one validity check required")
-    corpusIngestQuarantineFragmentedSink(docs, mat.fragmented(model, "doc_id"),
-      mat.fragmented(model + "__rejects", "doc_id"), checks, compactEvery)
-  }
-
-  /** [[corpusIngestSink]] with NEAR-dup awareness: each micro-batch
-    * additionally drops rows whose verified near-duplicate already
-    * lives in the materialized corpus. Same table-is-the-state
+  /** [[corpusIngestFragmentedSink]] with NEAR-dup awareness: each
+    * micro-batch additionally drops rows whose verified near-duplicate
+    * already lives in the corpus store `frag`. Same table-is-the-state
     * restart/idempotency story: a replayed batch's rows are near-dups
     * of their own previous append and are absorbed.
     *
-    * The corpus's MinHash signatures live in a `<model>__sigs` side-table
-    * (schema = [[graft.ext.IngestOps.minHashSigsOf]]) this sink maintains
+    * The corpus's MinHash signatures live in the `sigsFrag` side-table
+    * (conventionally `<model>__sigs`; schema =
+    * [[graft.ext.IngestOps.minHashSigsOf]]) this sink maintains
     * alongside the corpus, so per-batch signature COMPUTE is ∝ batch —
     * the corpus text is never re-tokenized or re-hashed per trigger
     * (that was the r6 full-corpus-recompute seam; the check itself is
@@ -416,42 +391,23 @@ object StreamingOps {
     * touch corpus text by construction). Each trigger runs two steps:
     *
     *   1. REPAIR: sign corpus rows missing from the side-table (id-only
-    *      anti-join; normally the previous batch's append, the whole
-    *      corpus once on migration from the r6 sink, the crash gap after
-    *      an interrupted trigger) and upsert them. Self-healing, so the
-    *      two tables need no cross-table atomic commit.
+    *      anti-join; normally the previous batch's append, the crash gap
+    *      after an interrupted trigger) and upsert them. Self-healing, so
+    *      the two tables need no cross-table atomic commit.
     *   2. CHECK+APPEND: dedup the batch against the (now complete)
     *      side-table, append survivors to the corpus. Their signatures
     *      land at the next trigger's repair.
     *
-    * Both tables commit as O(batch) fragments
-    * ([[corpusIngestNearDupFragmentedSink]]'s body). The sink assumes
-    * ONE ingest stream
-    * per model (the usual topology — a streaming query owns its sink
+    * BOTH tables commit as O(batch) fragments — per-trigger WRITE is the
+    * surviving batch (corpus) plus the newly-signed rows (side-table),
+    * never a table rewrite. The repair anti-join still READS the merged
+    * corpus and side-table ids (the LSM read-amplification trade
+    * `compactEvery` bounds). The sink assumes ONE ingest stream per
+    * model (the usual topology — a streaming query owns its sink
     * tables); `hotShingles` is a PINNED stopword-shingle list baked into
     * stored signatures, so it must stay constant for a table's lifetime.
     * A replaced doc_id with CHANGED text is out of contract (the repair
     * anti-join is id-keyed); corpus ingest appends new ids.
-    */
-  def corpusIngestNearDupSink(docs: DataFrame, mat: Materializer, model: String,
-                              threshold: Double,
-                              numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
-                              hotShingles: Seq[String] = Nil,
-                              compactEvery: Long = 0L): DataStreamWriter[Row] =
-    corpusIngestNearDupFragmentedSink(docs, mat.fragmented(model, "doc_id"),
-      mat.fragmented(model + "__sigs", "doc_id"), threshold, numHashes, bands,
-      shingleK, hotShingles, compactEvery)
-
-  /** [[corpusIngestNearDupSink]] over [[graft.runtime.FragmentedTable]]s:
-    * identical repair → check+append protocol and `__sigs` side-table
-    * contract, but BOTH tables commit as O(batch) fragments — per-trigger
-    * WRITE is the surviving batch (corpus) plus the newly-signed rows
-    * (side-table), never a table rewrite. The repair anti-join still
-    * READS the merged corpus and side-table ids (the LSM read-
-    * amplification trade `compactEvery` bounds), but signature COMPUTE
-    * stays ∝ unsigned rows — normally exactly the previous trigger's
-    * survivors. Same one-stream-per-model, pinned-`hotShingles`, and
-    * append-only-ids contracts as [[corpusIngestNearDupSink]].
     */
   def corpusIngestNearDupFragmentedSink(docs: DataFrame,
                                         frag: graft.runtime.KeyedFragmentStore,
@@ -1035,31 +991,17 @@ object StreamingOps {
     } finally { ks.unpersist(false); () }
   }
 
-  /** EMBEDDING-modality continuous ingest: the [[corpusIngestSink]]
-    * bridge for vector corpora — each micro-batch drops vectors whose
-    * cosine similarity to the materialized corpus reaches `threshold`
-    * (within-batch greedy removal first), then appends survivors
+  /** EMBEDDING-modality continuous ingest: the
+    * [[corpusIngestFragmentedSink]] bridge for vector corpora — each
+    * micro-batch drops vectors whose cosine similarity to the corpus
+    * store `frag` reaches `threshold` (within-batch greedy removal
+    * first), then appends survivors as one new fragment
     * ([[graft.ext.IngestOps.appendDedupEmbeddings]]: the batch
-    * broadcasts into the corpus scan — exact screening, no corpus
-    * shuffle). Same table-is-the-state restart story as the text
-    * sinks: a replayed batch's vectors are cosine-1.0 duplicates of
-    * their own previous append and are absorbed. The corpus commits as
-    * O(batch) fragments ([[corpusIngestEmbedFragmentedSink]]'s body).
-    * For large batches swap the exact screen for the indexed probe
-    * ([[corpusIngestEmbedIndexedSink]]).
-    */
-  def corpusIngestEmbedSink(vecs: DataFrame, mat: Materializer, model: String,
-                            threshold: Double,
-                            compactEvery: Long = 0L): DataStreamWriter[Row] =
-    corpusIngestEmbedFragmentedSink(vecs, mat.fragmented(model, "vec_id"),
-      threshold, compactEvery)
-
-  /** [[corpusIngestEmbedSink]] over a [[graft.runtime.FragmentedTable]]:
-    * the same exact cosine screen (batch broadcasts into the merged
-    * corpus read — no corpus shuffle), but each trigger writes only its
-    * surviving vectors as a new fragment. Replay idempotency is the
-    * table's: a redelivered vector is a cosine-1.0 duplicate of its own
-    * previous fragment and survives nothing.
+    * broadcasts into the merged corpus read — exact screening, no corpus
+    * shuffle). Replay idempotency is the table's: a redelivered vector
+    * is a cosine-1.0 duplicate of its own previous fragment and survives
+    * nothing. For large batches swap the exact screen for the indexed
+    * probe ([[corpusIngestEmbedIndexedSink]]).
     */
   def corpusIngestEmbedFragmentedSink(vecs: DataFrame,
                                       frag: graft.runtime.KeyedFragmentStore,

@@ -60,6 +60,49 @@ class BenchLinesSpec extends AnyFunSuite {
     assert(node.get("worst_real").get("row").asText == "q_\"evil\\name\n")
   }
 
+  test("main line carries each row's layer map; summary and tail lines carry none of it") {
+    val layerKeys = Seq("jobs", "stages", "tasks", "executor_run_s", "shuffle_read_mb",
+      "shuffle_write_mb", "input_mb", "build_s", "par_eff")
+    val names = (1 to 200).map(i => f"q_row_$i%03d")
+    val run = BenchLines.Run(
+      total = 12345.678, sf = "/data/sf0.1", host = """{"cpus":4}""",
+      contended = false, hostFactor = 1.0, decodeFactor = 1.0, ref = "ref.json",
+      flags = names.take(20).map(n => BenchLines.Flag(n, 9.5, 1.0, 0.01, "real")),
+      errors = Nil, spreads = names.map(_ -> 0.05), timings = names.map(_ -> 2.0),
+      layers = names.map(_ -> BenchLines.RowLayers(buildS = 0.25, wallS = 2.0,
+        jobs = 12, stages = 30, tasks = 99999, executorRunMs = 6000,
+        shuffleReadBytes = 3L << 20, shuffleWriteBytes = 1L << 20,
+        inputBytes = 5L << 20)),
+      cpus = 4)
+
+    val main = mapper.readTree(BenchLines.mainLine(run))
+    assert(main.get("metric").asText == "total")
+    val layers = main.get("layers")
+    assert(layers.size == names.size)
+    for (n <- names; k <- layerKeys) assert(layers.get(n).has(k), s"row $n lacks $k")
+    val row = layers.get("q_row_001")
+    assert(row.get("jobs").asLong == 12 && row.get("stages").asLong == 30)
+    assert(row.get("executor_run_s").asDouble == 6.0)
+    assert(row.get("shuffle_read_mb").asDouble == 3.0 && row.get("input_mb").asDouble == 5.0)
+    assert(row.get("build_s").asDouble == 0.25)
+    // 6 s of task time over 2 s × 4 cores
+    assert(row.get("par_eff").asDouble == 0.75)
+    assert(main.get("flagged").size == 20)
+
+    val summaryText = BenchLines.summaryLine(run)
+    val summary = mapper.readTree(summaryText)
+    assert(summary.get("metric").asText == "summary")
+    for (k <- "layers" +: "queries" +: layerKeys)
+      assert(!summaryText.contains("\"" + k + "\""), s"summary line carries $k")
+    assert(summary.get("flagged").size == BenchLines.SummaryFlagCap)
+    assert(summary.get("flagged_dropped").asInt == 20 - BenchLines.SummaryFlagCap)
+
+    val tail = worstCaseTail(Some(("q_row_001", 9.5, 1.0, 0.01)))
+    for (k <- "layers" +: layerKeys)
+      assert(!tail.contains("\"" + k + "\""), s"tail line carries $k")
+    assert(tail.getBytes("UTF-8").length <= BenchLines.TailByteBudget)
+  }
+
   test("verdict ranking puts real first, unknown last") {
     val ranked = Seq("subsecond", "real", "unknown", "noisy", "contention")
       .sortBy(BenchLines.verdictRank)

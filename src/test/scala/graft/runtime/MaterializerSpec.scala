@@ -251,34 +251,6 @@ class MaterializerSpec extends SparkSpec {
     assert(out == Map("k1" -> 1, "k2" -> 20, "k3" -> 30))
   }
 
-  test("compact merges small files, changes no rows, commits via the pointer") {
-    val mat = new Materializer(spark, freshDir())
-    // a fragmented table: 8 part files for 16 rows (the per-trigger
-    // append shape a long-running streaming sink leaves behind)
-    val rows = (1 to 16).map(i => (s"k$i", i))
-    mat.materialize("t", "id")(_ => rows.toDF("id", "v").repartition(8))
-    def partFiles(): Int = new java.io.File(mat.outPath("t"))
-      .listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(partFiles() == 8, s"expected a fragmented table, got ${partFiles()} files")
-    val before = mat.outPath("t")
-
-    mat.compact("t", 1)
-    assert(partFiles() == 1, s"compaction left ${partFiles()} files")
-    assert(mat.outPath("t") != before, "compact must commit a NEW version dir")
-    assert(mat.readPrior("t").get.as[(String, Int)].collect().toSet == rows.toSet,
-      "compaction changed table content")
-    // and the next upsert composes on the compacted table as usual
-    val out = mat.materialize("t", "id")(_ => Seq(("k1", 100)).toDF("id", "v"))
-      .as[(String, Int)].collect().toMap
-    assert(out("k1") == 100 && out.size == 16)
-  }
-
-  test("compact on a missing model is a no-op") {
-    val mat = new Materializer(spark, freshDir())
-    mat.compact("nope", 1)
-    assert(!mat.exists("nope"))
-  }
-
   test("append strategy: batches accumulate with no key matching; duplicates survive") {
     val mat = new Materializer(spark, freshDir())
     mat.materializeAppend("log")(_ => Seq(("e1", 1), ("e2", 2)).toDF("id", "v"))
