@@ -126,16 +126,7 @@ object IngestOps {
                                 threshold: Double,
                                 numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
                                 textCol: String = "text", idCol: String = "doc_id",
-                                hotShingles: Seq[String] = Nil): DataFrame =
-    appendDedupNearDupIndexedSigned(existingSigs, incoming, threshold,
-      numHashes, bands, shingleK, textCol, idCol, hotShingles)._1
-
-  private def appendDedupNearDupIndexedSigned(
-                                existingSigs: DataFrame, incoming: DataFrame,
-                                threshold: Double,
-                                numHashes: Int, bands: Int, shingleK: Int,
-                                textCol: String, idCol: String,
-                                hotShingles: Seq[String]): (DataFrame, DataFrame) = {
+                                hotShingles: Seq[String] = Nil): DataFrame = {
     val rows = numHashes / bands
     // drop signature-less rows (empty toks — the streaming side-table's
     // convergence TOMBSTONES, see corpusIngestNearDupFragmentedSink): they
@@ -166,77 +157,7 @@ object IngestOps {
       // where duplicate ids are harmless — the dedup exchange was one
       // more synchronous stage (the RoutedCounted lesson)
       .select(col("in_id").as(idCol))
-    (batch.join(broadcast(drops), Seq(idCol), "left_anti"),
-      exSigs.unionByName(inAll))
-  }
-
-  /** [[appendDedupNearDup]]'s result PLUS the pool signature frame the
-    * pipeline already computed — `poolSigs` keyed by `doc_id` (the
-    * [[graft.ext.DedupOps.minHashSigFrame]] schema: doc_id, toks, sig),
-    * covering the existing corpus ∪ the incoming batch's exact-dedup
-    * representatives (every distinct pool TEXT with a nonempty token
-    * set; an exact-dup shadow shares its kept twin's tokens). A
-    * verification gate over this ingest
-    * ([[graft.ext.StructGate.ingestNearDupGate]]'s `poolToks`) reuses
-    * it instead of re-tokenizing the pool — with shingleK = 1 and no
-    * hot-shingle list, `toks` is exactly `TextOps.distinctTokens(text)`.
-    * With a hot list or k > 1 the toks are the PRUNED shingle sets —
-    * only pass them to a consumer whose metric is defined over the
-    * same sets.
-    *
-    * Both frames come back PINNED and MATERIALIZED, each stage executed
-    * exactly once — the lazy [[appendDedupNearDupIndexed]] plan embeds
-    * the exact-dedup/signature subtrees three-plus times (Spark does no
-    * cross-join common-subexpression elimination), which an A/B at
-    * sf0.1 measured as ~2× the single-execution cost. The CALLER must
-    * `unpersist()` both frames once consumed ([[SignedIngest
-    * .unpersistAll]]) — same contract as [[RoutedAppend]].
-    */
-  final case class SignedIngest(survivors: DataFrame, poolSigs: DataFrame) {
-    def unpersistAll(): Unit = {
-      poolSigs.unpersist(false); survivors.unpersist(false); ()
-    }
-  }
-
-  def appendDedupNearDupSigned(existing: DataFrame, incoming: DataFrame,
-                               threshold: Double,
-                               numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
-                               textCol: String = "text", idCol: String = "doc_id",
-                               maxDocFreqRatio: Option[Double] = None): SignedIngest = {
-    val rows = numHashes / bands
-    val hot = maxDocFreqRatio
-      .map(r => DedupOps.hotShinglesOf(existing, r, shingleK, textCol, idCol))
-      .getOrElse(Nil)
-    // the RoutedCounted pinning discipline, applied to the full-frame
-    // corpus side: every stage materializes once, fans out from cache
-    val exSigs = DedupOps.minHashSigFrame(existing, numHashes, shingleK,
-      textCol, idCol, hot).persist()
-    val exact = DedupOps.dedupExact(incoming, textCol, idCol).persist()
-    val inAll = DedupOps.minHashSigFrame(exact, numHashes, shingleK, textCol,
-      idCol, hot).persist()
-    val batch = DedupOps.removeNearDups(exact,
-      DedupOps.pairsOfSigFrame(inAll, bands, rows, threshold), idCol).persist()
-    val inS = inAll.join(broadcast(batch.select(col(idCol).as("doc_id"))),
-      Seq("doc_id"), "left_semi")
-    val cand = DedupOps.lshBands(exSigs, "sig", bands, rows).as("x")
-      .join(broadcast(DedupOps.lshBands(inS, "sig", bands, rows).as("y")),
-        col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key"))
-      .select(col("x.doc_id").as("ex_id"), col("y.doc_id").as("in_id"))
-      .distinct()
-    val drops = exSigs.select(col("doc_id").as("ex_id"), col("toks").as("ex_toks"))
-      .join(broadcast(cand), Seq("ex_id"))
-      .join(broadcast(inS.select(col("doc_id").as("in_id"), col("toks").as("in_toks"))),
-        Seq("in_id"))
-      .filter(size(array_intersect(col("ex_toks"), col("in_toks"))).cast("double") /
-        size(array_union(col("ex_toks"), col("in_toks"))) >= threshold)
-      .select(col("in_id").as(idCol)) // no distinct: broadcast anti-join tolerates dups
-    val survivors = batch.join(broadcast(drops), Seq(idCol), "left_anti").persist()
-    survivors.count()
-    val poolSigs = exSigs.unionByName(inAll).persist()
-    poolSigs.count() // materialize BEFORE the sources release
-    exSigs.unpersist(false); exact.unpersist(false)
-    inAll.unpersist(false); batch.unpersist(false)
-    SignedIngest(survivors, poolSigs)
+    batch.join(broadcast(drops), Seq(idCol), "left_anti")
   }
 
   /** The PERSISTED band rows of a signature frame — one row per (doc,
@@ -256,6 +177,25 @@ object IngestOps {
       .select(concat_ws(":", col("band"), col("doc_id")).as("__bk"),
         col("band_key"), col("band"), col("doc_id").as(idCol))
 
+  /** [[appendDedupNearDupRoutedCounted]]'s result: the survivors and
+    * their signature frame, both PINNED, with the row counts the
+    * pinning already computed — a sink consuming both frames can
+    * branch on emptiness and the tombstone condition (`nSigs ==
+    * nSurvivors`) without re-running count jobs against the persisted
+    * blocks (three driver round-trips per trigger that add up at high
+    * trigger rates). The CALLER must release both frames with
+    * [[unpersistAll]] once consumed, or a long-running sink
+    * accumulates blocks per trigger (persist keeps lineage, so a
+    * post-unpersist action merely recomputes — never breaks).
+    */
+  final case class RoutedAppend(survivors: DataFrame, sigs: DataFrame,
+                                nSurvivors: Long, nSigs: Long,
+                                driverVerify: Boolean = true) {
+    def unpersistAll(): Unit = {
+      sigs.unpersist(false); survivors.unpersist(false); ()
+    }
+  }
+
   /** [[appendDedupNearDupIndexed]] with the corpus side behind two
     * POINT-PROBE closures instead of a full signature frame — the
     * corpus-independent per-trigger shape:
@@ -270,61 +210,22 @@ object IngestOps {
     *     toks)) for the candidate ids — a key-routed point read;
     *     again a superset is fine.
     *
-    * Candidate pairs are collected to the driver once (the SAME
-    * boundedness assumption as the indexed path, which broadcasts them)
-    * so the verify join never re-executes the band probe. Output is
-    * identical to [[appendDedupNearDupIndexed]] over the signatures the
-    * stores hold — the LSH operating point, hot-shingle list, and
-    * verified-Jaccard metric are unchanged.
+    * Output is identical to [[appendDedupNearDupIndexed]] over the
+    * signatures the stores hold — the LSH operating point, hot-shingle
+    * list, and verified-Jaccard metric are unchanged. The result also
+    * carries the survivors' signature frame ([[minHashSigsOf]] schema:
+    * doc_id, toks, sig): the probe already signed every batch row, so a
+    * sink that persists signatures (the banded sink's sig/band side
+    * stores) reuses them instead of re-tokenizing + re-hashing the
+    * survivors. Survivors with no signature (all-hot-shingle docs) are
+    * absent from that frame, exactly as [[minHashSigsOf]] omits them.
     *
-    * The returned frame is PINNED (persist + materialize): the
-    * per-trigger pipeline runs each stage exactly once — the un-pinned
-    * form re-executed the batch prep three times (keys collect,
-    * candidate collect, final assembly) and re-ran the store probes per
-    * consumer action, which dominated trigger latency at small batch
-    * sizes. Intermediates unpersist before return; the CALLER must
-    * `unpersist()` the returned frame once consumed, or a long-running
-    * sink accumulates a block per trigger (persist keeps lineage, so a
-    * post-unpersist action merely recomputes — never breaks).
-    */
-  def appendDedupNearDupRouted(bandProbe: Seq[Long] => Option[DataFrame],
-                               toksProbe: Seq[Any] => Option[DataFrame],
-                               incoming: DataFrame, threshold: Double,
-                               numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
-                               textCol: String = "text", idCol: String = "doc_id",
-                               hotShingles: Seq[String] = Nil): DataFrame = {
-    val (survivors, sigs) = appendDedupNearDupRoutedSigned(bandProbe, toksProbe,
-      incoming, threshold, numHashes, bands, shingleK, textCol, idCol, hotShingles)
-    sigs.unpersist(false)
-    survivors
-  }
-
-  /** [[appendDedupNearDupRoutedSigned]]'s result with the row counts
-    * the pinning already computed: a sink consuming both frames can
-    * branch on emptiness and the tombstone condition (`nSigs ==
-    * nSurvivors`) without re-running count jobs against the persisted
-    * blocks — three driver round-trips per trigger that add up at
-    * high trigger rates.
-    */
-  final case class RoutedAppend(survivors: DataFrame, sigs: DataFrame,
-                                nSurvivors: Long, nSigs: Long,
-                                driverVerify: Boolean = true) {
-    def unpersistAll(): Unit = {
-      sigs.unpersist(false); survivors.unpersist(false); ()
-    }
-  }
-
-  /** [[appendDedupNearDupRouted]] that ALSO returns the survivors'
-    * signature frame ([[minHashSigsOf]] schema: doc_id, toks, sig) —
-    * both PINNED — plus the counts the materialization already paid
-    * for. The probe already signed every batch row; a sink that
-    * persists signatures (the banded sink's sig/band side stores)
-    * reuses them instead of re-tokenizing + re-hashing the survivors,
-    * cutting one full signature pass per trigger. Survivors with no
-    * signature (all-hot-shingle docs) are absent from the frame,
-    * exactly as [[minHashSigsOf]] omits them. The CALLER must
-    * `unpersist()` both returned frames once consumed
-    * ([[RoutedAppend.unpersistAll]]).
+    * Every stage is PINNED and runs exactly once — the un-pinned form
+    * re-executed the batch prep three times (keys collect, candidate
+    * collect, final assembly) and re-ran the store probes per consumer
+    * action, which dominated trigger latency at small batch sizes.
+    * Intermediates unpersist before return; see [[RoutedAppend]] for
+    * the caller's release contract.
     */
   def appendDedupNearDupRoutedCounted(bandProbe: Seq[Long] => Option[DataFrame],
                                toksProbe: Seq[Any] => Option[DataFrame],
@@ -463,7 +364,7 @@ object IngestOps {
     * candidate ex-ids (bounded by banding collisions, ids only) make
     * the driver round-trips the probe closures require, and the
     * verified-Jaccard filter runs as cluster-side joins — the
-    * [[appendDedupNearDupIndexedSigned]] shape against probed stores.
+    * [[appendDedupNearDupIndexed]] shape against probed stores.
     * Metric, LSH operating point, and survivor set are identical to the
     * driver regime (spec-gated equivalence + regime flip).
     */
@@ -528,46 +429,6 @@ object IngestOps {
       cm.getOrElse(1, 0L), cm.getOrElse(2, 0L), driverVerify = false)
   }
 
-  /** [[appendDedupNearDupRoutedCounted]] without the counts — kept for
-    * callers that only consume the frames.
-    */
-  def appendDedupNearDupRoutedSigned(bandProbe: Seq[Long] => Option[DataFrame],
-                               toksProbe: Seq[Any] => Option[DataFrame],
-                               incoming: DataFrame, threshold: Double,
-                               numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
-                               textCol: String = "text", idCol: String = "doc_id",
-                               hotShingles: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val r = appendDedupNearDupRoutedCounted(bandProbe, toksProbe, incoming,
-      threshold, numHashes, bands, shingleK, textCol, idCol, hotShingles)
-    (r.survivors, r.sigs)
-  }
-
-  /** Near-dup-aware incremental ingest — the production recipe for "new
-    * crawl vs existing corpus": within-batch exact + greedy near-dup
-    * removal first, then every surviving incoming doc is LSH-checked
-    * against the materialized corpus and dropped if a verified
-    * near-duplicate already exists.
-    *
-    * Scale shape: the corpus side is SCANNED (signature + bands are
-    * map-only over it), never repartitioned — the incoming batch's band
-    * keys broadcast into the corpus band stream, candidate ids
-    * broadcast back into the corpus token fetch, and the final drop is
-    * a broadcast anti-join. Corpus cost per ingest is two map-side
-    * scans; nothing corpus-sized ever shuffles. Recall is LSH recall at
-    * the configured (numHashes, bands) operating point — the same
-    * contract as [[DedupOps.minHashNearDupPairs]], spec-gated.
-    * Doc ids are assumed unique across existing ∪ incoming.
-    *
-    * `maxDocFreqRatio` prunes hot shingles exactly as the batch dedup
-    * paths do: the hot list is derived from the EXISTING corpus (df >
-    * ratio·|existing| — the statistically meaningful side) and applied
-    * to BOTH sides before hashing, so a corpus-wide boilerplate shingle
-    * can neither flood the band join with |ex|×|in| candidates nor
-    * shift the verified metric between sides. Repeated ingests should
-    * prefer [[appendDedupNearDupIndexed]] with a PINNED list: a
-    * per-ingest derived list drifts as the corpus grows, and pruning
-    * must match whatever signatures it is compared against.
-    */
   /** [[appendDedupNearDup]] with the LSH candidate stage replaced by an
     * EXHAUSTIVE inverted-index pair search: every within-batch and
     * cross-corpus pair sharing ≥1 token is exactly verified, so the
@@ -603,6 +464,32 @@ object IngestOps {
     batch.join(broadcast(drops), Seq(idCol), "left_anti")
   }
 
+  /** Near-dup-aware incremental ingest — the production recipe for "new
+    * crawl vs existing corpus": within-batch exact + greedy near-dup
+    * removal first, then every surviving incoming doc is LSH-checked
+    * against the materialized corpus and dropped if a verified
+    * near-duplicate already exists.
+    *
+    * Scale shape: the corpus side is SCANNED (signature + bands are
+    * map-only over it), never repartitioned — the incoming batch's band
+    * keys broadcast into the corpus band stream, candidate ids
+    * broadcast back into the corpus token fetch, and the final drop is
+    * a broadcast anti-join. Corpus cost per ingest is two map-side
+    * scans; nothing corpus-sized ever shuffles. Recall is LSH recall at
+    * the configured (numHashes, bands) operating point — the same
+    * contract as [[DedupOps.minHashNearDupPairs]], spec-gated.
+    * Doc ids are assumed unique across existing ∪ incoming.
+    *
+    * `maxDocFreqRatio` prunes hot shingles exactly as the batch dedup
+    * paths do: the hot list is derived from the EXISTING corpus (df >
+    * ratio·|existing| — the statistically meaningful side) and applied
+    * to BOTH sides before hashing, so a corpus-wide boilerplate shingle
+    * can neither flood the band join with |ex|×|in| candidates nor
+    * shift the verified metric between sides. Repeated ingests should
+    * prefer [[appendDedupNearDupIndexed]] with a PINNED list: a
+    * per-ingest derived list drifts as the corpus grows, and pruning
+    * must match whatever signatures it is compared against.
+    */
   def appendDedupNearDup(existing: DataFrame, incoming: DataFrame, threshold: Double,
                          numHashes: Int = 32, bands: Int = 8, shingleK: Int = 1,
                          textCol: String = "text", idCol: String = "doc_id",
@@ -646,7 +533,7 @@ object IngestOps {
   }
 
   /** Perceptual-signature incremental ingest with the corpus behind a
-    * band-key POINT PROBE — [[appendDedupNearDupRouted]]'s shape for
+    * band-key POINT PROBE — [[appendDedupNearDupRoutedCounted]]'s shape for
     * the MEDIA modality (images via dHash, audio via the window
     * envelope, any 64-bit SimHash-style signature): within-batch
     * hamming collapse first ([[DedupOps.hammingNearDupPairsFromSigs]] +
@@ -743,7 +630,7 @@ object IngestOps {
     * small token edits (maxDist ≈ 3). Its miss class is REORDER-heavy
     * and paraphrase-ish duplication (SimHash is token-set-based but
     * weight-blind): corpora needing Jaccard-verified resemblance keep
-    * the MinHash/toks-store path ([[appendDedupNearDupRouted]]) as the
+    * the MinHash/toks-store path ([[appendDedupNearDupRoutedCounted]]) as the
     * second rung — precise threshold semantics at ~40× the per-doc
     * state. Run the SimHash rung first; route its survivors into the
     * MinHash rung only where the corpus's duplication profile needs it.

@@ -99,7 +99,7 @@ final class SqIndex private (
   }
 
   /** The code table (corpus_id, code array<int>) — diagnostics/spec seam. */
-  private[graft] def codeTable: DataFrame = codes
+  private[ext] def codeTable: DataFrame = codes
 
   /** Persist codes + per-dimension params; reopen with [[SqIndex.load]]. */
   def save(path: String): Unit = {

@@ -201,27 +201,12 @@ object StructGate {
     * the pool (existing corpus ∪ incoming) — every drop was earned,
     * whether by the exact leg (jaccard 1) or a verified near-dup.
     * LSH recall (drops that were MISSED) rides the exactmode twin.
-    *
-    * `poolToks` (schema ⊇ (idCol, toks)) lets a caller REUSE token
-    * work the production pipeline already paid for — e.g. the
-    * signature frames of [[graft.ext.IngestOps.appendDedupNearDupSigned]]
-    * or a RoutedAppend's `sigs` — instead of the gate re-tokenizing
-    * the whole pool (VERDICT r12 #3: at sf0.1 the re-tokenization was
-    * ~2.5× the row's production cost). CONTRACT: each row's `toks`
-    * must equal `tokensOf(text)` for that pool doc (true for
-    * shingleK=1 sig frames with no hot-shingle list), and the frame
-    * must cover every pool doc with a nonempty token set OR an
-    * identical-text twin of it (exact-dup shadows witness through
-    * their kept twin at Jaccard 1). Empty-token pool docs are
-    * witness-inert either way: intersection 0 over a nonempty union
-    * is 0 < threshold, and 0/0 compares null — never a witness.
     */
   def ingestNearDupGate(survivors: DataFrame, pool: DataFrame,
                         incoming: DataFrame, threshold: Double,
                         tokensOf: Column => Column,
                         idCol: String = "doc_id",
-                        textCol: String = "text",
-                        poolToks: Option[DataFrame] = None): DataFrame = {
+                        textCol: String = "text"): DataFrame = {
     def t(d: DataFrame) =
       d.select(col(idCol).as("__id"), tokensOf(col(textCol)).as("__toks"))
     // PIN the gate's subject: the flag row references the survivor set
@@ -259,10 +244,7 @@ object StructGate {
     // times per gate evaluation. Both are released with the eager
     // collect below, same discipline as sv/dropped.
     val dT = t(dropped).withColumn("__n", size(col("__toks"))).persist()
-    val pT = poolToks
-      .map(_.select(col(idCol).as("__id"), col("toks").as("__toks")))
-      .getOrElse(t(pool))
-      .persist()
+    val pT = t(pool).persist()
     val dfRank = pT.select(explode(col("__toks")).as("__t"))
       .groupBy("__t").agg(count(lit(1)).as("__df"))
     // exact-decimal ⌈t·n⌉ (see DedupOps.prefixCandidatesOf): double

@@ -52,11 +52,9 @@ object IndexProfile {
   * guarantee is the one their own specs gate.
   *
   * Layout at `path/`: `kind` (one-line rung + knobs marker, written
-  * tmp+atomic-move), `idx/` (the rung's own save dir), and — for rungs
-  * whose index does not retain full vectors (brute, SQ8, IVF-PQ) —
-  * `corpus/` parquet for exact refine, maintenance retrains, and
-  * recall ground truth. IVF keeps vectors in its cells and HNSW in its
-  * nodes, so those rungs pay no copy.
+  * tmp+atomic-move) plus the rung's own files — which rung trains an
+  * `idx/` and which also keeps a `corpus/` copy is decided in one place,
+  * `VectorIndex.stageRung` / `keepsCorpus`.
   */
 final class VectorIndex private (val spark: SparkSession, val path: String,
                                  kind0: String, profile0: IndexProfile) {
@@ -91,17 +89,10 @@ final class VectorIndex private (val spark: SparkSession, val path: String,
   // whose anti-joins are no-ops
   private def deletedPath = s"$path/deleted"
 
-  /** Replace `live` with its fully-written `live__new` sibling: old is
-    * renamed to `__old` (the readable fallback through the crash
-    * window), new moves in, backup is GC'd. `__new` must exist.
-    */
+  /** [[VectorIndex.swapIn]], then GC the backup. */
   private def swapInNew(liveName: String): Unit = {
-    val live = Paths.get(s"$path/$liveName")
-    val old = Paths.get(s"$path/${liveName}__old")
-    graft.runtime.Fs.deleteRecursive(old)
-    if (Files.exists(live)) Files.move(live, old)
-    Files.move(Paths.get(s"$path/${liveName}__new"), live)
-    graft.runtime.Fs.deleteRecursive(old)
+    swapIn(path, liveName)
+    graft.runtime.Fs.deleteRecursive(Paths.get(s"$path/${liveName}__old"))
   }
 
   /** Ids tombstoned by [[delete]] and not yet purged by [[maintain]],
@@ -117,11 +108,12 @@ final class VectorIndex private (val spark: SparkSession, val path: String,
     */
   def deletedCount(): Long = deletedIds.map(_.count()).getOrElse(0L)
 
-  private def baseCorpus: DataFrame = kind match {
-    case Brute | Sq | IvfPq => spark.read.parquet(corpusPath)
-    case Ivf => IvfIndex.load(spark, idxPath).assignments
+  private def baseCorpus: DataFrame = {
+    val k = kind
+    if (keepsCorpus(k)) spark.read.parquet(corpusPath)
+    else if (k == Ivf) IvfIndex.load(spark, idxPath).assignments
       .select(col("corpus_id").as("vec_id"), col("cv").as("embedding"))
-    case Hnsw => spark.read.parquet(s"$idxPath/nodes")
+    else spark.read.parquet(s"$idxPath/nodes")
       .select(col("corpus_id").as("vec_id"), col("v").as("embedding"))
   }
 
@@ -235,25 +227,26 @@ final class VectorIndex private (val spark: SparkSession, val path: String,
           .join(d, Seq("vec_id"), "left_semi").isEmpty,
         "batch contains tombstoned ids; run maintain() before re-appending them")
     }
-    def keepCorpus(): Unit =
-      batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-        .write.mode("append").parquet(corpusPath)
-    kind match {
-      case Brute =>
-        val n = batch.count(); keepCorpus(); AppendSummary(n, maintenanceRecommended = false)
+    val k = kind
+    val summary = k match {
+      case Brute => AppendSummary(batch.count(), maintenanceRecommended = false)
       case Ivf =>
         val r = IvfIndex.append(spark, idxPath, batch, idCol, vecCol)
         AppendSummary(r.appended, r.retrainRecommended)
       case Sq =>
         val r = SqIndex.append(spark, idxPath, batch, idCol, vecCol)
-        keepCorpus(); AppendSummary(r.appended, r.retrainRecommended)
+        AppendSummary(r.appended, r.retrainRecommended)
       case IvfPq =>
         val r = IvfPqIndex.append(spark, idxPath, batch, idCol, vecCol)
-        keepCorpus(); AppendSummary(r.appended, r.retrainRecommended)
+        AppendSummary(r.appended, r.retrainRecommended)
       case Hnsw =>
         val r = HnswIndex.append(spark, idxPath, batch, idCol = idCol, vecCol = vecCol)
         AppendSummary(r.appended, r.compactRecommended)
     }
+    if (keepsCorpus(k))
+      batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
+        .write.mode("append").parquet(corpusPath)
+    summary
   }
 
   /** The maintenance the rung's drift report asks for: retrain from the
@@ -310,46 +303,21 @@ final class VectorIndex private (val spark: SparkSession, val path: String,
       bumpMaintains()
       return
     }
-    k0 match {
-      case Brute => () // corpus rewrite below is the whole purge
-      case Ivf =>
-        // IVF's retrain input IS its own cell table: stage the new index
-        // to a sibling dir, then two-rename swap (an in-place overwrite
-        // would delete the files the training scan is still reading; the
-        // __old backup keeps the swap's crash window readable)
-        val tmp = s"$path/idx__new"
-        graft.runtime.Fs.deleteRecursive(Paths.get(tmp))
-        IvfIndex.train(c, nlist = nlistFor(n)).save(tmp)
-        swapInNew("idx")
-      case Sq =>
-        // unlike Ivf the retrain input lives in corpus/, not idx/, but an
-        // in-place save still has a crash window where a partial idx dir
-        // would resolve as live — and maintain() now runs inline from the
-        // streaming sink's purge/resurrection path, so the window recurs;
-        // stage + two-rename swap like the other rebuild sites
-        val sqTmp = s"$path/idx__new"
-        graft.runtime.Fs.deleteRecursive(Paths.get(sqTmp))
-        SqIndex.train(c).save(sqTmp)
-        swapInNew("idx")
-      case IvfPq =>
-        val pqTmp = s"$path/idx__new"
-        graft.runtime.Fs.deleteRecursive(Paths.get(pqTmp))
-        IvfPqIndex.train(c, nlist = nlistFor(n)).save(pqTmp)
-        swapInNew("idx")
-      case Hnsw =>
-        HnswIndex.compact(spark, idxPath, exclude =
-          deletedIds.map(_.withColumnRenamed("vec_id", "corpus_id")))
+    if (k0 == Hnsw)
+      HnswIndex.compact(spark, idxPath, exclude =
+        deletedIds.map(_.withColumnRenamed("vec_id", "corpus_id")))
+    else {
+      // retrain every idx/ from the tombstone-free corpus and — when
+      // there are tombstones to purge — rewrite the kept corpus/ copy,
+      // staged as `__new` siblings and two-rename swapped: the rebuild
+      // input may BE the live dir (IVF trains from its own cell table,
+      // the corpus copy rewrites from itself), and a crash mid-save must
+      // never leave a partial dir resolving as live
+      stageRung(path, k0, c, n, "__new", withCorpus = hadDeletes)
+      if (k0 != Brute) swapInNew("idx")
+      if (hadDeletes && keepsCorpus(k0)) swapInNew("corpus")
     }
-    if (hadDeletes) {
-      if (k0 == Brute || k0 == Sq || k0 == IvfPq) {
-        // rewrite the refine/ground-truth corpus without the tombstones
-        val tmp = s"$path/corpus__new"
-        graft.runtime.Fs.deleteRecursive(Paths.get(tmp))
-        corpusFrame.write.parquet(tmp)
-        swapInNew("corpus")
-      }
-      graft.runtime.Fs.deleteRecursive(Paths.get(deletedPath))
-    }
+    if (hadDeletes) graft.runtime.Fs.deleteRecursive(Paths.get(deletedPath))
     bumpMaintains()
   }
 
@@ -363,20 +331,8 @@ final class VectorIndex private (val spark: SparkSession, val path: String,
     * crash-test the window between stage and commit.
     */
   private[ext] def stageMigration(newKind: String, c: DataFrame, n: Long): Unit = {
-    graft.runtime.Fs.deleteRecursive(Paths.get(s"$path/idx__new"))
-    graft.runtime.Fs.deleteRecursive(Paths.get(s"$path/corpus__new"))
-    val std = c.select(col("vec_id"), col("embedding"))
-    newKind match {
-      case Brute => std.write.parquet(s"$path/corpus__new")
-      case Ivf => IvfIndex.train(std, nlist = nlistFor(n)).save(s"$path/idx__new")
-      case Sq =>
-        SqIndex.train(std).save(s"$path/idx__new")
-        std.write.parquet(s"$path/corpus__new")
-      case IvfPq =>
-        IvfPqIndex.train(std, nlist = nlistFor(n)).save(s"$path/idx__new")
-        std.write.parquet(s"$path/corpus__new")
-      case Hnsw => HnswIndex.train(std).save(s"$path/idx__new")
-    }
+    stageRung(path, newKind, c.select(col("vec_id"), col("embedding")), n,
+      "__new", withCorpus = true)
     writeKindFile(path, "kind__new", newKind, profile)
   }
 
@@ -454,6 +410,51 @@ object VectorIndex {
   private def nlistFor(n: Long): Int =
     math.min(4096, math.max(16, math.sqrt(n.toDouble).toInt))
 
+  /** Rungs whose own index does not retain full vectors keep a
+    * `corpus/` parquet copy for exact refine, maintenance retrains and
+    * recall ground truth; IVF keeps vectors in its cells and HNSW in its
+    * nodes. Every rung but brute trains an `idx/`.
+    */
+  private def keepsCorpus(kind: String): Boolean = kind match {
+    case Brute | Sq | IvfPq => true
+    case _ => false
+  }
+
+  /** The rung table: write `kind`'s on-disk layout for `std` (vec_id,
+    * embedding; `n` rows) under `path` — `idx$suffix` trained from it,
+    * and with `withCorpus` the [[keepsCorpus]] copy `corpus$suffix`.
+    * The targets are cleared first, so a crashed earlier stage never
+    * leaks into this one.
+    */
+  private def stageRung(path: String, kind: String, std: DataFrame, n: Long,
+                        suffix: String, withCorpus: Boolean): Unit = {
+    val idx = s"$path/idx$suffix"
+    val corpus = s"$path/corpus$suffix"
+    graft.runtime.Fs.deleteRecursive(Paths.get(idx))
+    if (withCorpus) graft.runtime.Fs.deleteRecursive(Paths.get(corpus))
+    kind match {
+      case Brute => ()
+      case Ivf => IvfIndex.train(std, nlist = nlistFor(n)).save(idx)
+      case Sq => SqIndex.train(std).save(idx)
+      case IvfPq => IvfPqIndex.train(std, nlist = nlistFor(n)).save(idx)
+      case Hnsw => HnswIndex.train(std).save(idx)
+    }
+    if (withCorpus && keepsCorpus(kind)) std.write.parquet(corpus)
+  }
+
+  /** Replace `live` with its fully-written `live__new` sibling: old is
+    * renamed to `__old` (the readable fallback through the crash
+    * window), new moves in. The caller GCs the backup. `__new` must
+    * exist.
+    */
+  private def swapIn(path: String, liveName: String): Unit = {
+    val live = Paths.get(s"$path/$liveName")
+    val old = Paths.get(s"$path/${liveName}__old")
+    graft.runtime.Fs.deleteRecursive(old)
+    if (Files.exists(live)) Files.move(live, old)
+    Files.move(Paths.get(s"$path/${liveName}__new"), live)
+  }
+
   /** Pick the rung for (n rows, d dims) under `profile` — pure,
     * spec-gated directly.
     */
@@ -475,18 +476,9 @@ object VectorIndex {
     val dims = corpus.select(size(col(vecCol))).head.getInt(0)
     val kind = selectKind(n, dims, profile)
     Files.createDirectories(Paths.get(path))
-    val std = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    kind match {
-      case Brute => std.write.mode("overwrite").parquet(s"$path/corpus")
-      case Ivf => IvfIndex.train(std, nlist = nlistFor(n)).save(s"$path/idx")
-      case Sq =>
-        SqIndex.train(std).save(s"$path/idx")
-        std.write.mode("overwrite").parquet(s"$path/corpus")
-      case IvfPq =>
-        IvfPqIndex.train(std, nlist = nlistFor(n)).save(s"$path/idx")
-        std.write.mode("overwrite").parquet(s"$path/corpus")
-      case Hnsw => HnswIndex.train(std).save(s"$path/idx")
-    }
+    stageRung(path, kind,
+      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")), n,
+      suffix = "", withCorpus = true)
     writeKind(path, kind, profile)
     new VectorIndex(corpus.sparkSession, path, kind, profile)
   }
@@ -537,15 +529,6 @@ object VectorIndex {
     if (!Files.exists(marker)) return
     val newKind = new String(Files.readAllBytes(marker), "UTF-8")
       .trim.split('\t').head
-    val needsIdx = newKind != Brute
-    val needsCorpus = newKind == Brute || newKind == Sq || newKind == IvfPq
-    def swap(liveName: String): Unit = {
-      val live = Paths.get(s"$path/$liveName")
-      val old = Paths.get(s"$path/${liveName}__old")
-      graft.runtime.Fs.deleteRecursive(old)
-      if (Files.exists(live)) Files.move(live, old)
-      Files.move(Paths.get(s"$path/${liveName}__new"), live)
-    }
     def retire(liveName: String): Unit = {
       val live = Paths.get(s"$path/$liveName")
       if (Files.exists(live)) {
@@ -554,10 +537,10 @@ object VectorIndex {
         Files.move(live, old)
       }
     }
-    if (Files.exists(Paths.get(s"$path/idx__new"))) swap("idx")
-    else if (!needsIdx) retire("idx")
-    if (Files.exists(Paths.get(s"$path/corpus__new"))) swap("corpus")
-    else if (!needsCorpus) retire("corpus")
+    if (Files.exists(Paths.get(s"$path/idx__new"))) swapIn(path, "idx")
+    else if (newKind == Brute) retire("idx")
+    if (Files.exists(Paths.get(s"$path/corpus__new"))) swapIn(path, "corpus")
+    else if (!keepsCorpus(newKind)) retire("corpus")
     Files.move(marker, Paths.get(s"$path/kind"), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
     graft.runtime.Fs.deleteRecursive(Paths.get(s"$path/idx__old"))

@@ -582,14 +582,12 @@ object ExtQueries {
       val docs = docsSub(s, dir)
       val existing = docs.filter(col("doc_id") % 20 === 0)
       val incoming = docs.filter(col("doc_id") % 20 =!= 0)
-      // Token REUSE from the production pipeline was implemented
-      // (appendDedupNearDupSigned + the gate's poolToks) and MEASURED
-      // SLOWER here — dev/gate_ab_r13.json: at this row's scale the
-      // cost is job/stage count and verify volume, not tokenize work,
-      // so the lazy production op + the gate's own pinned tokenize +
-      // exact-twin/length-filtered witness search is the honest fast
-      // shape. poolToks remains the right call for sinks whose sig
-      // frames are ALREADY pinned (RoutedAppend consumers).
+      // The gate re-tokenizes the pool itself: reusing the production
+      // pipeline's signature tokens was MEASURED SLOWER here
+      // (dev/gate_ab_r13.json — at this row's scale the cost is
+      // job/stage count and verify volume, not tokenize work), so the
+      // lazy production op + the gate's own pinned tokenize is the
+      // fast shape.
       StructGate.ingestNearDupGate(
         IngestOps.appendDedupNearDup(existing, incoming, threshold = 0.9),
         pool = docs, incoming = incoming, threshold = 0.9,
@@ -1323,7 +1321,7 @@ object ExtQueries {
           col("reject_reason"))
     }),
     // Incremental MEDIA ingest against a persisted perceptual-signature
-    // index — appendDedupNearDupRouted's corpus-independent shape for
+    // index — appendDedupNearDupRoutedCounted's corpus-independent shape for
     // the media modality: the existing corpus is each doc's PNG render
     // persisted as hamming band rows (bandRowsOfSigs through a
     // band_key-routed store, probed by readRouted); the incoming batch

@@ -22,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   *   identically on every executor for the same plan count, so the
   *   production value is the same as the local one. 2048 bounds the
   *   metaspace cost (generated classes are KBs each) while covering every
-  *   pipeline this engine ships. Env-overridable for A/B
-  *   (SPARK_GRAFT_CODEGEN_CACHE).
+  *   pipeline this engine ships. The r18 A/B behind both codegen confs
+  *   is recorded in OPTIMIZATION_r18.md.
   *
   * - `spark.sql.codegen.useIdInClassName` true → false (r18): with the
   *   default, the codegen STAGE ID is embedded in the generated class
@@ -35,10 +35,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionTuning {
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2048"))
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CLASS_ID", "false"))
+    b.config("spark.sql.codegen.cache.maxEntries", "2048")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // AQE coalescing's floor on post-shuffle partition size (default
       // 1 MB) serializes every compute-dense small shuffle: a pair-verify
       // self-join or banded candidate join over a sub-MB exchange

@@ -204,26 +204,21 @@ object StreamingOps {
     * useless tombstones. A delete racing AHEAD of its key's ingest is
     * therefore a no-op by design — deletion applies to the corpus as
     * of the trigger, not to future arrivals.
+    *
+    * With an `index` over the same corpus, each trigger's live keys are
+    * ALSO tombstoned there ([[graft.ext.VectorIndex.delete]]) — corpus
+    * delete ⇒ index delete in one call, so a forgotten document stops
+    * being retrievable in the same trigger that tombstones its text.
+    * The index tombstone is O(keys) and replay-safe for the same reason
+    * the fragment side is: a redelivered trigger's keys are no longer
+    * live in the corpus, so both deletes skip. Index purge rides the
+    * index's own [[graft.ext.VectorIndex.maintain]] cadence, not this
+    * sink's.
     */
   def keyDeletionFragmentedSink(requests: DataFrame,
                                 frag: graft.runtime.KeyedFragmentStore,
-                                compactEvery: Long = 0L): DataStreamWriter[Row] =
-    keyDeletionFragmentedSink(requests, frag, compactEvery, index = None)
-
-  /** [[keyDeletionFragmentedSink]] that ALSO tombstones each trigger's
-    * live keys in an ANN index over the same corpus
-    * ([[graft.ext.VectorIndex.delete]]) — corpus delete ⇒ index delete
-    * in one call, so a forgotten document stops being retrievable in
-    * the same trigger that tombstones its text. The index tombstone is
-    * O(keys) and replay-safe for the same reason the fragment side is:
-    * a redelivered trigger's keys are no longer live in the corpus, so
-    * both deletes skip. Index purge rides the index's own
-    * [[graft.ext.VectorIndex.maintain]] cadence, not this sink's.
-    */
-  def keyDeletionFragmentedSink(requests: DataFrame,
-                                frag: graft.runtime.KeyedFragmentStore,
-                                compactEvery: Long,
-                                index: Option[graft.ext.VectorIndex]): DataStreamWriter[Row] =
+                                compactEvery: Long = 0L,
+                                index: Option[graft.ext.VectorIndex] = None): DataStreamWriter[Row] =
     requests.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         frag.read().foreach { cur =>
@@ -1001,7 +996,7 @@ object StreamingOps {
     * shuffle). Replay idempotency is the table's: a redelivered vector
     * is a cosine-1.0 duplicate of its own previous fragment and survives
     * nothing. For large batches swap the exact screen for the indexed
-    * probe ([[corpusIngestEmbedIndexedSink]]).
+    * probe ([[corpusIngestEmbedVectorIndexSink]]).
     */
   def corpusIngestEmbedFragmentedSink(vecs: DataFrame,
                                       frag: graft.runtime.KeyedFragmentStore,
@@ -1022,104 +1017,26 @@ object StreamingOps {
         ()
     }
 
-  /** The INDEXED scale path of [[corpusIngestEmbedFragmentedSink]] — the
-    * "swap the exact screen for an index probe when batches grow large"
-    * trade, wired end-to-end: the near-dup check runs as an SQ8 ADC
-    * scan over the persisted CODE table (8 bytes/dim, no corpus vector
-    * reads) with an exact refine of only |batch|·shortlist candidates,
-    * survivors append O(batch) to BOTH the fragment corpus and the code
-    * index ([[graft.ext.SqIndex.append]]), and when the append report's
-    * clamp-fraction drift trips, the sink retrains the index from the
-    * merged corpus in place — the full maintenance loop, inside the
-    * trigger. First batch bootstraps the index from its own survivors.
-    *
-    * Honesty: the screen is approximate — a true near-dup whose ADC
-    * shortlist misses it survives ingestion (recall gated in
-    * SqIndexSpec; raise `shortlist` to buy it back). Replay stays
-    * idempotent: a redelivered vector refines against its own previous
-    * append at cosine 1.0 and is absorbed. Same single-writer topology
-    * as every ingest sink; `indexPath` is owned by this sink.
-    */
-  def corpusIngestEmbedIndexedSink(vecs: DataFrame,
-                                   frag: graft.runtime.KeyedFragmentStore,
-                                   indexPath: String,
-                                   threshold: Double,
-                                   shortlist: Int = 32,
-                                   compactEvery: Long = 0L): DataStreamWriter[Row] =
-    vecs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // within-batch exact screen first (batches are small by contract)
-        val batchDeduped = graft.ext.DedupOps.removeNearDups(batch,
-          graft.ext.SimilarityOps.cosinePairs(batch, threshold),
-          idCol = "vec_id", dropCol = "vec_b")
-        val survivors = frag.read() match {
-          case None => batchDeduped
-          case Some(corpus) =>
-            // id-level replay absorption FIRST: the refined probe's
-            // self-exclusion (query_id =!= corpus_id) means a replayed
-            // vector cannot match its own previous append by content —
-            // an id already in the corpus IS its previous append
-            val fresh = batchDeduped.join(
-              corpus.select(col("vec_id")), Seq("vec_id"), "left_anti")
-            // REPAIR: the corpus may be ahead of the index (crash after
-            // frag.upsert, before the index append/save — replays are
-            // id-absorbed above, so the gap would never close on its
-            // own). Same self-healing discipline as the near-dup sink's
-            // __sigs side-table: missing index → rebuild from the
-            // corpus; lagging index → append exactly the unindexed rows
-            // (id-only anti-join; encode cost ∝ the gap)
-            if (!new java.io.File(s"$indexPath/codes").exists())
-              graft.ext.SqIndex.train(corpus).save(indexPath)
-            else {
-              val unindexed = corpus.join(
-                graft.ext.SqIndex.load(spark, indexPath).codeTable
-                  .select(col("corpus_id").as("vec_id")),
-                Seq("vec_id"), "left_anti")
-              if (!unindexed.isEmpty)
-                graft.ext.SqIndex.append(spark, indexPath, unindexed)
-            }
-            val idx = graft.ext.SqIndex.load(spark, indexPath)
-            val hits = idx.topKRefined(fresh, corpus, k = 1,
-                shortlist = shortlist)
-              .filter(col("sim") >= threshold)
-              .select(col("query_id").as("vec_id")).distinct()
-            fresh.join(broadcast(hits), Seq("vec_id"), "left_anti")
-        }
-        if (!survivors.isEmpty) {
-          frag.upsert(survivors)
-          if (!new java.io.File(s"$indexPath/codes").exists())
-            graft.ext.SqIndex.train(survivors).save(indexPath)
-          else {
-            val report = graft.ext.SqIndex.append(spark, indexPath, survivors)
-            // drift: the trained ranges stopped covering the stream —
-            // retrain from the merged corpus (one exact min/max pass)
-            if (report.retrainRecommended)
-              frag.read().foreach(c =>
-                graft.ext.SqIndex.train(c).save(indexPath))
-          }
-        }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          cadenceFold(frag)
-        ()
-    }
-
-  /** The indexed embed sink GENERALIZED over the unified ANN front door
-    * ([[graft.ext.VectorIndex]]): the same screen → append → drift-
-    * maintain loop as [[corpusIngestEmbedIndexedSink]], but the index
-    * rung comes from `profile` — IVF, SQ8, IVF-PQ, HNSW, or brute all
-    * get the streaming maintenance cadence through one sink (VERDICT r8
-    * ask #8). Per trigger: within-batch exact screen, id-level replay
-    * absorption, the facade rung's `search(k=1)` near-dup check at
-    * `threshold`, O(batch) `append` of survivors to BOTH the fragment
-    * corpus and the index, and — when the rung's drift report fires —
-    * an in-place `maintain()` (retrain/compact, the scheduled O(corpus)
-    * trade every rung documents).
+  /** The INDEXED scale path of [[corpusIngestEmbedFragmentedSink]] —
+    * "swap the exact screen for an index probe when batches grow large",
+    * wired end-to-end over the unified ANN front door
+    * ([[graft.ext.VectorIndex]]). The rung comes from `profile`: brute,
+    * IVF, SQ8 (an ADC scan over the code table with an exact refine of
+    * only |batch|·shortlist candidates), IVF-PQ or HNSW all get the same
+    * streaming maintenance loop through this one sink. Per trigger:
+    * within-batch exact screen, id-level replay absorption, the rung's
+    * `search(k=1)` near-dup check at `threshold`, O(batch) `append` of
+    * survivors to BOTH the fragment corpus and the index, and — when the
+    * rung's drift report fires (SQ8: clamped values outside the trained
+    * ranges) — an in-place `maintain()` (retrain/compact, the scheduled
+    * O(corpus) trade every rung documents).
     *
     * The rung is SELECTED AT BOOTSTRAP from the first surviving batch
-    * (pass an explicit `exactFloor`/`serving` to pin it — a first batch
-    * smaller than the floor bootstraps the brute rung and stays there).
-    * Crash repair mirrors the SQ8 sink: a corpus ahead of the index
+    * (pass an explicit `exactFloor`/`serving` to pin it); a later FULL
+    * `maintain()` re-selects it against the grown corpus. Approximate
+    * rungs screen approximately: a true near-dup the probe misses
+    * survives ingestion (recall gated per rung; raise the profile's
+    * `shortlist` / `nprobe` to buy it back). Crash repair: a corpus ahead of the index
     * (died between `frag.upsert` and the index append) is healed by an
     * id-anti-join append of exactly the unindexed rows; a lost index
     * rebuilds from the merged corpus. Same single-writer topology;

@@ -123,37 +123,6 @@ class StructGateSpec extends SparkSpec {
       except = Set("dropped_have_witness"))
   }
 
-  test("ingestNearDupGate poolToks reuse: same verdicts, violations still flip") {
-    // the registered row's shape (VERDICT r12 #3): gate consumes the
-    // production pipeline's own signature frame instead of re-tokenizing
-    val docs = Sources(spark, dir).documents.filter(col("doc_id") % 10 === 0)
-    val existing = docs.filter(col("doc_id") % 20 === 0)
-    val incoming = docs.filter(col("doc_id") % 20 =!= 0)
-    val signed = IngestOps.appendDedupNearDupSigned(existing, incoming, 0.9)
-    val toks = Some(signed.poolSigs.select(col("doc_id"), col("toks")))
-    allTrue(StructGate.ingestNearDupGate(signed.survivors, docs, incoming,
-      0.9, TextOps.distinctTokens _, poolToks = toks))
-    // falsifiability must survive the reuse: a dropped survivor still
-    // has no witness when the gate searches the PROVIDED token frame
-    val victim = signed.survivors.select("doc_id").as[Long].head()
-    allTrue(StructGate.ingestNearDupGate(
-        signed.survivors.filter(col("doc_id") =!= victim), docs, incoming,
-        0.9, TextOps.distinctTokens _, poolToks = toks),
-      except = Set("dropped_have_witness"))
-    // and a poisoned token frame (pool tokens replaced by the dropped
-    // docs' own tokens) must not hallucinate witnesses for a genuinely
-    // novel reject — token reuse is a performance contract, not a
-    // verdict input the caller can silently weaken: the gate's verify
-    // leg recomputes exact Jaccard from whatever frame it is handed,
-    // so an all-empty frame yields no witnesses at all
-    allTrue(StructGate.ingestNearDupGate(
-        signed.survivors.limit(0), docs, incoming, 0.9,
-        TextOps.distinctTokens _,
-        poolToks = Some(signed.poolSigs
-          .select(col("doc_id"), array().cast("array<string>").as("toks")))),
-      except = Set("survivors_nonempty", "dropped_have_witness"))
-  }
-
   test("ingestNearDupGate prefix pruning: rare-token witness found under a flooding hot token") {
     // every doc shares the Zipf-head token "the" ×2 (so it can never be
     // a prefix token at t=0.9 — prefixes take the RAREST n−⌈tn⌉+1);

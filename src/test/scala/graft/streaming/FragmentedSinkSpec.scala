@@ -452,93 +452,13 @@ class FragmentedSinkSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("indexed embed sink: SQ8-screened ingest, index appends O(batch), drift retrains in place") {
-    import graft.ext.VectorFixtures.synthVec
-    def jig(base: Seq[Float], eps: Float): Seq[Float] =
-      base.zipWithIndex.map { case (v, d) => if (d == 0) v + eps else v }
-    implicit val sqlCtx = spark.sqlContext
-    val dir = freshDir()
-    val frag = new FragmentedTable(spark, dir, "ivecs", "vec_id")
-    val idxPath = s"$dir/ivecs_sq"
-    def corpus: Set[Long] = frag.read()
-      .map(_.select("vec_id").as[Long].collect().toSet).getOrElse(Set.empty)
-    def indexRows: Long =
-      graft.ext.SqIndex.load(spark, idxPath).codeTable.count()
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingOps.corpusIngestEmbedIndexedSink(
-      in.toDF().toDF("vec_id", "embedding"), frag, idxPath,
-      threshold = 0.99).start()
-    try {
-      // batch 1 bootstraps the index from its own survivors (3 jiggles 1)
-      in.addData((1L, synthVec(1)), (2L, synthVec(2)), (3L, jig(synthVec(1), 0.01f)))
-      q.processAllAvailable()
-      assert(corpus == Set(1L, 2L), corpus.toString)
-      assert(indexRows == 2L)
-      // batch 2: 11 near-dups MATERIALIZED vec 1 — caught by the CODE
-      // scan + refine, never a corpus-wide vector pass; 12 novel
-      in.addData((11L, jig(synthVec(1), 0.01f)), (12L, synthVec(50)))
-      q.processAllAvailable()
-      assert(corpus == Set(1L, 2L, 12L), corpus.toString)
-      assert(indexRows == 3L, "index must append exactly the survivors")
-      // replay: absorbed at the ID level; index does NOT grow
-      in.addData((11L, jig(synthVec(1), 0.01f)), (12L, synthVec(50)))
-      q.processAllAvailable()
-      assert(corpus == Set(1L, 2L, 12L), corpus.toString)
-      assert(indexRows == 3L, "replay must not grow the code table")
-      // drifted batch: one-hot vectors outside the trained ranges clamp
-      // -> the sink retrains the index from the merged corpus in place
-      in.addData((21L, (0 until 64).map(i => if (i == 0) 1.0f else 0.0f)),
-        (22L, (0 until 64).map(i => if (i == 1) 1.0f else 0.0f)))
-      q.processAllAvailable()
-      assert(corpus == Set(1L, 2L, 12L, 21L, 22L), corpus.toString)
-      assert(indexRows == 5L)
-      // post-retrain ranges cover the whole merged corpus: a vector
-      // drawn from it clamps nothing
-      val r = graft.ext.SqIndex.append(spark, idxPath,
-        Seq((99L, synthVec(2))).toDF("vec_id", "embedding"))
-      assert(r.clampedFraction == 0.0 && !r.retrainRecommended,
-        s"retrain must have widened the ranges: $r")
-    } finally q.stop()
-  }
-
-  test("indexed embed sink: corpus-ahead-of-index crash states self-heal") {
-    import graft.ext.VectorFixtures.synthVec
-    implicit val sqlCtx = spark.sqlContext
-    val dir = freshDir()
-    val frag = new FragmentedTable(spark, dir, "rvecs", "vec_id")
-    val idxPath = s"$dir/rvecs_sq"
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingOps.corpusIngestEmbedIndexedSink(
-      in.toDF().toDF("vec_id", "embedding"), frag, idxPath,
-      threshold = 0.99).start()
-    try {
-      in.addData((1L, synthVec(1)), (2L, synthVec(2)))
-      q.processAllAvailable()
-      // crash simulation A: corpus gained a row the index never saw
-      // (died after frag.upsert, before the index append)
-      frag.upsert(Seq((7L, synthVec(7))).toDF("vec_id", "embedding"))
-      // crash simulation B at its extreme: the whole index save was lost
-      graft.runtime.Fs.deleteRecursive(java.nio.file.Paths.get(idxPath))
-      in.addData((12L, synthVec(50)))
-      q.processAllAvailable()
-      // repair rebuilt the index over the FULL corpus + the new survivor
-      val idxIds = graft.ext.SqIndex.load(spark, idxPath).codeTable
-        .select("corpus_id").as[Long].collect().toSet
-      assert(idxIds == Set(1L, 2L, 7L, 12L), idxIds.toString)
-      // and the healed index actually screens: a near-dup of the
-      // once-unindexed vector 7 is now absorbed
-      in.addData((17L, synthVec(7)))
-      q.processAllAvailable()
-      val corpus = frag.read().get.select("vec_id").as[Long].collect().toSet
-      assert(corpus == Set(1L, 2L, 7L, 12L), corpus.toString)
-    } finally q.stop()
-  }
-
-  // the facade-generalized indexed embed sink, parameterized over rungs:
-  // the SQ8 sink's screen → append → drift-maintain loop now reaches
-  // every VectorIndex rung (VERDICT r8 ask #8)
+  // the indexed embed sink, parameterized over rungs: one screen →
+  // append → drift-maintain loop for every VectorIndex rung. With 64-dim
+  // vectors the "sq" budget (1000 B) holds SQ8 codes (n·d) but not full
+  // vectors (n·d·8) for 2 ≤ n ≤ 15, so that profile picks SQ8 throughout
   for ((rung, profile) <- Seq(
       "ivf" -> graft.ext.IndexProfile(exactFloor = 0L),
+      "sq" -> graft.ext.IndexProfile(exactFloor = 0L, memoryBudgetBytes = 1000L),
       "hnsw" -> graft.ext.IndexProfile(serving = true, exactFloor = 0L))) {
     test(s"facade indexed embed sink [$rung]: screened ingest, O(batch) index appends, crash repair, maintain") {
       import graft.ext.VectorFixtures.synthVec
@@ -607,6 +527,32 @@ class FragmentedSinkSpec extends SparkSpec {
         assert(indexIds.contains(12L),
           "resurrection must purge + re-append, not kill the query")
         assert(idx.deletedCount() == 0L, "the resurrect purge clears tombstones")
+        // drift: one-hot vectors lie outside the trained distribution
+        // (for SQ8, 1/64 of each vector's values clamp — over the 1%
+        // bound), so the sink maintains the index in the trigger
+        def oneHot(d: Int): Seq[Float] = (0 until 64).map(i => if (i == d) 1.0f else 0.0f)
+        val maintainsBefore = graft.ext.VectorIndex.maintainCount(idxPath)
+        in.addData((21L, oneHot(0)), (22L, oneHot(1)))
+        q.processAllAvailable()
+        val grown = Set(1L, 2L, 7L, 12L, 13L, 28L, 21L, 22L)
+        assert(corpus == grown, corpus.toString)
+        assert(indexIds == grown, indexIds.toString)
+        if (rung == "sq")
+          assert(graft.ext.VectorIndex.maintainCount(idxPath) == maintainsBefore + 1,
+            "SQ8 clamp drift must retrain inside the trigger")
+        // the maintained index covers the drifted corpus: appending a
+        // vector from it asks for no further maintenance (for SQ8: the
+        // widened ranges clamp nothing — before the retrain it clamped)
+        assert(!idx.append(Seq((99L, oneHot(0))).toDF("vec_id", "embedding"))
+          .maintenanceRecommended)
+        // crash state at its extreme: the whole index dir is lost — the
+        // next trigger rebuilds it over the full corpus, on the same rung
+        graft.runtime.Fs.deleteRecursive(java.nio.file.Paths.get(idxPath))
+        in.addData((31L, synthVec(80)))
+        q.processAllAvailable()
+        assert(idx.kind == rung, s"rebuild must re-select $rung, got ${idx.kind}")
+        assert(indexIds == grown + 31L, indexIds.toString)
+        assert(corpus == grown + 31L, corpus.toString)
       } finally q.stop()
     }
   }
