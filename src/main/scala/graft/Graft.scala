@@ -82,9 +82,11 @@ object Graft {
     graft.runtime.PlanAudit.audit(df)
 
   /** The reference user's `dbt run`: materialize all three models in
-    * dependency order into `warehouseDir` (incremental on re-run — the
-    * Materializer reads each model's prior table for the watermark
-    * seam). `sql = true` drives the run through the SQL surface
+    * dependency order into `warehouseDir` — traffic_daily_agg and
+    * traffic_pages_agg concurrently, then lead_activities_agg ([[Dag]]) —
+    * incremental on re-run (the Materializer reads each model's prior
+    * table for the watermark seam). One [[Sources]] per run: the run
+    * reads the source files present when it starts. `sql = true` drives the run through the SQL surface
     * instead of the DataFrame builders; both give the same rows and
     * schemas.
     */
@@ -102,10 +104,12 @@ object Graft {
     * so dbt would not order them; here it is a declared dep, and model 3
     * receives model 1's freshly materialized output.
     *
-    * `sql = true` builds each model from its SQL text (the `{{ this }}`
-    * seam resolved to the prior table through a temp view, the hidden
-    * edge through the `public_public.traffic_daily_agg` source view);
-    * otherwise from the DataFrame builders.
+    * `sql = true` builds each model from its SQL text (the three
+    * reference source views registered from `sources` —
+    * [[SqlModels.registerSourceViews]] — the `{{ this }}` seam resolved
+    * to the prior table through a temp view, the hidden edge through the
+    * `public_public.traffic_daily_agg` source view); otherwise from the
+    * DataFrame builders.
     *
     * @param log sink for the A5 debug lines (default: stdout).
     */
@@ -125,12 +129,13 @@ object Graft {
       },
       node("traffic_pages_agg") { (_, prior) => TrafficPagesAgg.build(events, prior) },
       node("lead_activities_agg", "traffic_daily_agg") { (refs, prior) =>
-        logLeadDebugCounts(sources, events, prior, log)
-        LeadActivitiesAgg.build(events, RefShapes.leadStageChangeEventsRef(sources.events),
-          refs("traffic_daily_agg"), prior)
+        val wm = Filters.watermark(prior, "activity_date")
+        logLeadDebugCounts(sources, events, wm, log)
+        LeadActivitiesAgg.buildSince(events, RefShapes.leadStageChangeEventsRef(sources.events),
+          refs("traffic_daily_agg"), wm)
       })
     else {
-      SqlModels.registerCatalog(spark, sources.dir)
+      SqlModels.registerSourceViews(sources)
       Seq(
         node("traffic_daily_agg") { (_, prior) =>
           val (ev, sp) = seam(prior, "graft_dag_this_daily", ("", ""))(
@@ -144,7 +149,7 @@ object Graft {
         node("lead_activities_agg", "traffic_daily_agg") { (refs, prior) =>
           refs("traffic_daily_agg").createOrReplaceTempView(
             SqlModels.sourceView("public_public", "traffic_daily_agg"))
-          logLeadDebugCounts(sources, events, prior, log)
+          logLeadDebugCounts(sources, events, Filters.watermark(prior, "activity_date"), log)
           spark.sql(SqlModels.leadActivitiesAggSql(
             seam(prior, "graft_dag_this_leads", "")(SqlModels.leadsIncrementalWhere)))
         })
@@ -157,20 +162,25 @@ object Graft {
     * (a) the lead-source input count, watermarked on `date >
     * max(activity_date)` of the prior output when incremental, and
     * (b) COUNT(DISTINCT domain_userid) over the bot-/internal-filtered
-    * page_view events. Both are O(1)-result driver collects mirroring
-    * dbt's pre-run scalars; neither feeds the pipeline (logging only).
+    * page_view events. Both scalars come back in ONE driver action,
+    * mirroring dbt's pre-run scalars; neither feeds the pipeline
+    * (logging only). `wm` is the leads watermark the caller collected
+    * from the prior output (None on a full build).
     */
   private def logLeadDebugCounts(sources: Sources, events: DataFrame,
-                                 prior: Option[DataFrame], log: String => Unit): Unit = {
+                                 wm: Option[java.sql.Date], log: String => Unit): Unit = {
     val leadsSrc = RefShapes.leadStageChangeEventsRef(sources.events)
-    val wm = Filters.watermark(prior, "activity_date")
-    val leadCount = Filters.watermarkFilter(leadsSrc, "date", wm).count()
+    // a union concatenates its children's partitions in order and each
+    // global aggregate is one row, so row 0 is the lead count
+    val Array(leadCount, eventUserCount) = Filters.watermarkFilter(leadsSrc, "date", wm)
+      .agg(count(lit(1)))
+      .union(events
+        .filter(col("event") === "page_view" &&
+          Filters.botFilter(col("useragent")) &&
+          col("refr_medium") =!= "internal")
+        .agg(countDistinct(col("domain_userid"))))
+      .collect().map(_.getLong(0))
     log(s"Lead activities input count: $leadCount")
-    val eventUserCount = events
-      .filter(col("event") === "page_view" &&
-        Filters.botFilter(col("useragent")) &&
-        col("refr_medium") =!= "internal")
-      .agg(countDistinct(col("domain_userid"))).head().getLong(0)
     log(s"Unique domain_userid in events: $eventUserCount")
   }
 }

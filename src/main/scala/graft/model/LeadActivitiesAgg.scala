@@ -31,8 +31,14 @@ object LeadActivitiesAgg {
     */
   def build(events: DataFrame, leads: DataFrame, trafficDaily: DataFrame,
             prior: Option[DataFrame] = None): DataFrame =
-    enrich(leadActivitiesOf(leads, prior), latestEventsOf(events),
-      trafficSpendOf(trafficDaily))
+    buildSince(events, leads, trafficDaily, Filters.watermark(prior, "activity_date"))
+
+  /** [[build]] with the leads watermark already collected from the prior
+    * output (`None` on a full build) — for callers that need it too.
+    */
+  private[graft] def buildSince(events: DataFrame, leads: DataFrame, trafficDaily: DataFrame,
+                                wm: Option[java.sql.Date]): DataFrame =
+    enrich(leadActivitiesOf(leads, wm), latestEventsOf(events), trafficSpendOf(trafficDaily))
 
   /** filtered_events + W1 window (:33-62) → latest_events (:64-75): one
     * best-touch row per user. The streaming surface produces the same
@@ -61,8 +67,7 @@ object LeadActivitiesAgg {
   /** lead_activities (:77-102) — DISTINCT + incremental watermark on
     * leads only.
     */
-  private[graft] def leadActivitiesOf(leads: DataFrame, prior: Option[DataFrame]): DataFrame = {
-    val wm = Filters.watermark(prior, "activity_date")
+  private[graft] def leadActivitiesOf(leads: DataFrame, wm: Option[java.sql.Date]): DataFrame =
     Filters.watermarkFilter(
       leads.select(
         col("company_domain"), col("company_id"), col("domain_userid"), col("lead_id"),
@@ -72,7 +77,6 @@ object LeadActivitiesAgg {
         col("pipeline_id"), col("pipeline_name"), col("product_id"), col("product_name"),
         col("product_price"), col("product_sku")),
       "activity_date", wm).distinct()
-  }
 
   /** traffic_spend (:104-115) — unique slice of model-1 output. */
   private[graft] def trafficSpendOf(trafficDaily: DataFrame): DataFrame =

@@ -25,27 +25,24 @@ object SubqueryQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Register the TPC-H-shaped views this battery's SQL references.
+  /** Register the TPC-H-shaped views one query's SQL references — only
+    * those: each registration resolves its table (one schema-inference
+    * job), so a query pays for the tables it reads, not the battery's.
     * Per-battery-suffixed names would shield against collisions, but the
     * canonical names keep the SQL text identical to the oracle text —
     * and every registry that registers these names registers the SAME
     * frame for a given (session, dir), so last-write-wins is benign.
     */
-  private def views(s: SparkSession, dir: String): Unit = {
+  private def views(s: SparkSession, dir: String, tables: String*): Unit = {
     val src = Sources(s, dir)
-    src.orders.createOrReplaceTempView("orders")
-    src.lineitem.createOrReplaceTempView("lineitem")
-    src.customer.createOrReplaceTempView("customer")
-    src.part.createOrReplaceTempView("part")
-    src.nation.createOrReplaceTempView("nation")
-    src.region.createOrReplaceTempView("region")
+    tables.foreach(t => src.table(t).createOrReplaceTempView(t))
   }
 
   val queries: Map[String, Q] = Map(
     // correlated EXISTS → left SEMI join after decorrelation (TPC-H Q4
     // shape): orders with at least one returned line, counted by priority
     "q_sub_exists" -> ((s, dir) => {
-      views(s, dir)
+      views(s, dir, "orders", "lineitem")
       s.sql("""
         SELECT o_orderpriority, count(*) AS order_count
         FROM orders
@@ -57,7 +54,7 @@ object SubqueryQueries {
     // an urgent order (every fixture customer has SOME order, so the
     // plain no-orders form would gate zero rows)
     "q_sub_not_exists" -> ((s, dir) => {
-      views(s, dir)
+      views(s, dir, "customer", "orders")
       s.sql("""
         SELECT c_mktsegment, count(*) AS customer_count
         FROM customer
@@ -70,7 +67,7 @@ object SubqueryQueries {
     // non-null here, so both engines agree on the set semantics while the
     // Spark plan still has to pick the null-aware join)
     "q_sub_not_in" -> ((s, dir) => {
-      views(s, dir)
+      views(s, dir, "part", "lineitem")
       s.sql("""
         SELECT p_brand, count(*) AS part_count
         FROM part
@@ -81,7 +78,7 @@ object SubqueryQueries {
     // per-part aggregate joined back, NOT a per-row re-scan: lines whose
     // quantity is under half their part's average
     "q_sub_scalar_corr" -> ((s, dir) => {
-      views(s, dir)
+      views(s, dir, "lineitem", "part")
       s.sql("""
         SELECT p_brand,
           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS small_qty_revenue,
@@ -94,7 +91,7 @@ object SubqueryQueries {
     // uncorrelated SCALAR subquery → evaluated once, broadcast as a
     // literal into the scan filter
     "q_sub_scalar_uncorr" -> ((s, dir) => {
-      views(s, dir)
+      views(s, dir, "orders")
       s.sql("""
         SELECT o_orderstatus, count(*) AS big_orders
         FROM orders
@@ -122,7 +119,7 @@ object SubqueryQueries {
     // nations by customer count per region — the "top-k per outer row"
     // idiom in its declarative form (ties broken by name, deterministic)
     "q_sub_lateral" -> ((s, dir) => {
-      views(s, dir)
+      views(s, dir, "region", "nation", "customer")
       s.sql("""
         SELECT r_name, n_name, customer_count
         FROM region, LATERAL (

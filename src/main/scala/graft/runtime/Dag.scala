@@ -1,6 +1,7 @@
 package graft.runtime
 
 import org.apache.spark.sql.DataFrame
+import scala.util.{Failure, Try}
 
 /** Model DAG with dbt's materialization kinds — the one batch runner,
   * behind `Graft.run` (the reference's three models as Incremental
@@ -29,13 +30,20 @@ import org.apache.spark.sql.DataFrame
   *    like dbt's CTE each consumer re-evaluates it unless the caller
   *    explicitly caches.
   *
-  * Nodes run in dependency (topological) order, ties broken by
-  * declaration order — deterministic, and the graph is validated up
+  * Nodes run in dependency (topological) LEVELS: a node's level is one
+  * past its deepest dep, and the nodes of one level run CONCURRENTLY on
+  * a pool of min(widest level, available processors) threads, created
+  * per run and shut down when it ends — dbt's `threads`. Overlapping
+  * independent models overlaps their driver-side gaps (planning, commit
+  * I/O, single-task jobs), which dominate small incremental runs; the
+  * Spark scheduler interleaves their jobs. The graph is validated up
   * front: an unknown `ref` or a cycle fails fast with the offending
-  * names, before any model runs. On a cluster, independent Table/
-  * Incremental nodes are independent Spark jobs (the runner is
-  * sequential; concurrency across independent subtrees is the
-  * scheduler's job).
+  * names, before any model runs.
+  *
+  * Failure: when a node throws, the rest of its level still runs to
+  * completion (a sibling's commit is never abandoned midway), no later
+  * level starts — so no dependent of the failed node runs — and `run()`
+  * rethrows the failure of the first failed node in declaration order.
   */
 object Dag {
 
@@ -64,10 +72,11 @@ object Dag {
       s"model $name: ephemeral models cannot be contracted (dbt's rule)")
   }
 
-  /** Declaration-order-stable topological sort; throws on unknown deps
-    * and cycles, naming them.
+  /** Declaration-order-stable topological levels: level k holds the
+    * nodes whose deps all sit in levels < k, in declaration order.
+    * Throws on unknown deps and cycles, naming them.
     */
-  private[runtime] def topoSort(nodes: Seq[Node]): Seq[Node] = {
+  private[runtime] def levels(nodes: Seq[Node]): Seq[Seq[Node]] = {
     val byName = nodes.map(n => n.name -> n).toMap
     require(byName.size == nodes.size,
       s"duplicate model name(s): ${nodes.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }.mkString(", ")}")
@@ -76,45 +85,66 @@ object Dag {
       require(unknown.isEmpty,
         s"model ${n.name} refs unknown model(s): ${unknown.mkString(", ")}")
     }
-    val done = scala.collection.mutable.LinkedHashSet[String]()
-    val out = Seq.newBuilder[Node]
+    val done = scala.collection.mutable.HashSet[String]()
+    val out = Seq.newBuilder[Seq[Node]]
     var remaining = nodes
     while (remaining.nonEmpty) {
       val (ready, blocked) = remaining.partition(_.deps.forall(done))
       require(ready.nonEmpty,
         s"dependency cycle among: ${blocked.map(_.name).mkString(", ")}")
-      ready.foreach { n => done += n.name; out += n }
+      done ++= ready.map(_.name)
+      out += ready
       remaining = blocked
     }
     out.result()
   }
+
+  /** [[levels]] flattened: a declaration-order-stable topological sort. */
+  private[runtime] def topoSort(nodes: Seq[Node]): Seq[Node] = levels(nodes).flatten
 }
 
 final class Dag(mat: Materializer, nodes: Seq[Dag.Node]) {
   import Dag._
 
-  private val ordered = Dag.topoSort(nodes)
+  private val levels = Dag.levels(nodes)
 
-  /** Run every model in dependency order. Returns each QUERYABLE
-    * model's frame (ephemerals are inlined, not exposed — dbt's rule).
+  /** Run every model, level by level (see the class doc for concurrency
+    * and failure semantics). Returns each QUERYABLE model's frame
+    * (ephemerals are inlined, not exposed — dbt's rule).
     */
   def run(): Map[String, DataFrame] = {
-    val frames = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
-    ordered.foreach { n =>
-      val refs = n.deps.map(d => d -> frames(d)).toMap
-      def gated(df: DataFrame): DataFrame =
-        n.contract.fold(df)(c => Contract.enforce(df, c))
-      val frame = n.mat match {
-        case Mat.Table => mat.materializeTable(n.name)(gated(n.build(refs, None)))
-        case Mat.Incremental(key, osc) =>
-          mat.materialize(n.name, key, osc)(prior => gated(n.build(refs, prior)))
-        case Mat.View => gated(n.build(refs, None))
-        case Mat.Ephemeral => n.build(refs, None)
+    val frames = scala.collection.mutable.HashMap[String, DataFrame]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(levels.map(_.size).maxOption.getOrElse(1), Runtime.getRuntime.availableProcessors()))
+    try levels.foreach { level =>
+      // refs read only earlier levels' frames, complete before submission
+      val running = level.map { n =>
+        val refs = n.deps.map(d => d -> frames(d)).toMap
+        pool.submit(new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = runNode(n, refs)
+        })
       }
-      frames(n.name) = frame
-    }
+      // the whole level finishes before the first failure (in declaration
+      // order) is rethrown, so a sibling's commit is never cut short
+      val outcomes = running.map(f => Try(f.get()).recoverWith {
+        case e: java.util.concurrent.ExecutionException => Failure(e.getCause)
+      })
+      level.zip(outcomes).foreach { case (n, o) => frames(n.name) = o.get }
+    } finally pool.shutdown()
     frames.view.filterKeys { n =>
       nodes.exists(x => x.name == n && x.mat != Mat.Ephemeral)
     }.toMap
+  }
+
+  private def runNode(n: Node, refs: Map[String, DataFrame]): DataFrame = {
+    def gated(df: DataFrame): DataFrame =
+      n.contract.fold(df)(c => Contract.enforce(df, c))
+    n.mat match {
+      case Mat.Table => mat.materializeTable(n.name)(gated(n.build(refs, None)))
+      case Mat.Incremental(key, osc) =>
+        mat.materialize(n.name, key, osc)(prior => gated(n.build(refs, prior)))
+      case Mat.View => gated(n.build(refs, None))
+      case Mat.Ephemeral => n.build(refs, None)
+    }
   }
 }

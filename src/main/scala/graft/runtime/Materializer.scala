@@ -2,6 +2,7 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths}
 
 /** Incremental materialization (SURVEY §2.10, S4/S5 + A4).
@@ -44,6 +45,17 @@ import java.nio.file.{Files, Paths}
   * the single-table analog of Iceberg snapshot reads + a CDC change
   * feed: any retained commit is readable, and the key-level diff
   * between two commits is one full-outer join ([[ChangeFeed]]).
+  *
+  * STORED SCHEMA: [[commitVersion]] writes the version's schema
+  * (`_graft_schema.json`, nullability relaxed the way Spark's file
+  * source relaxes it on read) into the version dir BEFORE the pointer
+  * flip, and every read of a version goes through [[readTable]] with it
+  * as the user schema — so re-reading a table this class wrote costs no
+  * parquet schema-inference job (the same trick [[FragmentedTable]]
+  * plays with its manifest DDL). The leading underscore keeps Spark's
+  * file listing from treating it as data. A version dir without the
+  * file (windowed commits, or one written before the file existed)
+  * reads by inference.
   *
   * [[materializeByDatePartition]] and the microbatch surface commit
   * through [[commitWindowedVersion]]: ordinary pointer-flip versions
@@ -168,7 +180,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
     */
   def readVersion(model: String, seq: Long): DataFrame =
     history(model).find(_._1 == seq) match {
-      case Some((_, d)) => spark.read.parquet(s"$baseDir/$d")
+      case Some((_, d)) => readTable(s"$baseDir/$d")
       case None => throw new IllegalArgumentException(
         s"version $seq of $model is not retained (have: " +
           s"${history(model).map(_._1).mkString(",")}; keepVersions=$keepVersions)")
@@ -266,7 +278,18 @@ final class Materializer(spark: SparkSession, baseDir: String,
     currentVersion(model).exists(v => Files.exists(Paths.get(baseDir, v, "_SUCCESS")))
 
   def readPrior(model: String): Option[DataFrame] =
-    if (exists(model)) Some(spark.read.parquet(outPath(model))) else None
+    if (exists(model)) Some(readTable(outPath(model))) else None
+
+  /** A version dir's table: read under its stored schema when the commit
+    * recorded one (no inference job), by parquet schema inference
+    * otherwise.
+    */
+  private def readTable(dir: String): DataFrame = {
+    val stored = Paths.get(dir, Materializer.SchemaFile)
+    if (!Files.exists(stored)) spark.read.parquet(dir)
+    else spark.read.schema(DataType.fromJson(Files.readString(stored)).asInstanceOf[StructType])
+      .parquet(dir)
+  }
 
   /** [[FragmentedTable]] handle for `table` in this warehouse — the
     * O(batch)-per-upsert layout the streaming ingest sinks default to.
@@ -405,12 +428,14 @@ final class Materializer(spark: SparkSession, baseDir: String,
     val newDir = s"$baseDir/$newName"
     try {
       result.write.mode(SaveMode.Overwrite).parquet(newDir)
+      Files.writeString(Paths.get(newDir, Materializer.SchemaFile),
+        FragmentedTable.relaxNullable(result.schema).json)
       publishCommit(model, newName)
     } catch {
       // a failed write must not orphan its version dir
       case e: Throwable => deleteRecursive(Paths.get(newDir)); throw e
     }
-    spark.read.parquet(outPath(model))
+    readTable(outPath(model))
   }
 
   /** Publish a fully-written version dir: GC superseded state, advance
@@ -510,7 +535,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
         .parquet(staging.toString)
       commitWindowedVersion(model, dateCol, staging, clearAbsent = Nil)
     } }
-    spark.read.parquet(outPath(model))
+    readTable(outPath(model))
   }
 
   /** dbt 1.9's MICROBATCH incremental strategy: the model is built one
@@ -571,7 +596,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
       // window to rebuild. Return the table unchanged rather than let
       // writeWindows crash on an empty reduce — the targeted surface
       // for true historical rebuilds is rebuildMicrobatchWindow.
-      if (days.isEmpty) spark.read.parquet(outPath(model))
+      if (days.isEmpty) readTable(outPath(model))
       else writeWindows(model, eventDateCol, days)(buildWindow)
     } }
   }
@@ -605,7 +630,7 @@ final class Materializer(spark: SparkSession, baseDir: String,
     // overwrite: empty means empty, never stale)
     commitWindowedVersion(model, eventDateCol, staging,
       clearAbsent = days.map(d => s"$eventDateCol=$d"))
-    spark.read.parquet(outPath(model))
+    readTable(outPath(model))
   }
 
   /** Fresh staging dir for one partitioned write, next to the version
@@ -735,6 +760,9 @@ final class Materializer(spark: SparkSession, baseDir: String,
 }
 
 object Materializer {
+  /** Per-version stored schema (JSON), written by every whole-dir commit. */
+  private[runtime] val SchemaFile = "_graft_schema.json"
+
   // JVM-global monitors, keyed by canonical "warehouse/model": all
   // Materializer instances over one warehouse serialize on the same
   // objects (per-instance maps would let two instances race the renames

@@ -32,12 +32,14 @@ object Parallelize {
     * `keys` when its physical plan has fewer partitions than that;
     * unchanged otherwise. Row-wise-independent downstream compute only
     * (results must not depend on co-location or intra-partition order
-    * beyond the per-key grouping the hash preserves).
+    * beyond the per-key grouping the hash preserves). A streaming frame
+    * comes back unchanged: it has no RDD to size, and each micro-batch's
+    * partitioning is the source's and the state store's to decide.
     */
   def fanOut(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "fanOut needs at least one distribution key")
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
+    if (df.isStreaming || df.rdd.getNumPartitions >= target) df
     else df.repartition(target, keys: _*)
   }
 }

@@ -10,6 +10,13 @@ import org.apache.spark.sql.functions._
   * model/operator reads through one seam (testable, swappable for a real
   * catalog/metastore on a cluster).
   *
+  * Each table resolves ONCE per instance: the first `table(name)` runs
+  * Spark's parquet schema inference (one single-task job per call) and
+  * pins the file listing; later calls return the same frame. One
+  * instance is therefore one snapshot of the catalog — `Graft.run`
+  * builds one per run, so a run sees the files present when it starts
+  * and the next run sees newly landed ones.
+  *
   * Scale note: parquet scans through this seam get Catalyst predicate
   * pushdown + column pruning for free; on a real deployment the same seam
   * would hand back partitioned-table scans (date-partitioned, see
@@ -17,7 +24,12 @@ import org.apache.spark.sql.functions._
   */
 final class Sources(spark: SparkSession, val dir: String) {
 
-  def table(name: String): DataFrame = {
+  private val resolved = scala.collection.mutable.HashMap[String, DataFrame]()
+
+  def table(name: String): DataFrame =
+    resolved.synchronized(resolved.getOrElseUpdate(name, read(name)))
+
+  private def read(name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

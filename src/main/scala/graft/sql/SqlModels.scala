@@ -47,13 +47,27 @@ object SqlModels {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => src.table(t).createOrReplaceTempView(t))
-    RefShapes.eventsRef(src.events)
-      .createOrReplaceTempView(sourceView("atomic", "events"))
-    RefShapes.campaignSpendsRef(src.events)
-      .createOrReplaceTempView(sourceView("public", "campaign_spends"))
-    RefShapes.leadStageChangeEventsRef(src.events)
-      .createOrReplaceTempView(sourceView("public", "lead_stage_change_events"))
+    registerSourceViews(src)
     registered.put(spark, dir)
+  }
+
+  /** Only the three reference-shaped source views, from `src`'s
+    * `events` — everything the three model SQL texts read besides
+    * `{{ this }}` and the hidden-edge view, so the DAG's SQL surface
+    * resolves one source table instead of the whole catalog. A session
+    * whose catalog was registered for another dir loses its
+    * [[ensureCatalog]] memo: its views no longer all come from one dir.
+    */
+  def registerSourceViews(src: Sources): Unit = {
+    val events = src.events
+    RefShapes.eventsRef(events)
+      .createOrReplaceTempView(sourceView("atomic", "events"))
+    RefShapes.campaignSpendsRef(events)
+      .createOrReplaceTempView(sourceView("public", "campaign_spends"))
+    RefShapes.leadStageChangeEventsRef(events)
+      .createOrReplaceTempView(sourceView("public", "lead_stage_change_events"))
+    val spark = events.sparkSession
+    if (registered.get(spark) != src.dir) registered.remove(spark)
   }
 
   // last catalog registration per session — [[ensureCatalog]]'s memo.

@@ -49,6 +49,51 @@ class DagSpec extends SparkSpec {
     assert(n.get() == 1)
   }
 
+  test("independent nodes of one level run concurrently") {
+    assume(Runtime.getRuntime.availableProcessors() >= 2, "needs two pool threads")
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val (aIn, bIn) = (new CountDownLatch(1), new CountDownLatch(1))
+    // each build signals it started, then waits for the other: a
+    // sequential runner would time out in the first node
+    def meet(mine: CountDownLatch, other: CountDownLatch, v: Int) =
+      (_: Map[String, DataFrame], _: Option[DataFrame]) => {
+        mine.countDown()
+        assert(other.await(60, TimeUnit.SECONDS), "sibling never started: nodes ran one at a time")
+        srcFrame(Seq(("k", v)))
+      }
+    val m = new Materializer(spark, freshDir())
+    val out = new Dag(m, Seq(
+      Node("a", Mat.Table, Nil, meet(aIn, bIn, 1)),
+      Node("b", Mat.Table, Nil, meet(bIn, aIn, 2)),
+      Node("ab", Mat.Table, Seq("a", "b"),
+        (r, _) => r("a").unionByName(r("b"))))).run()
+    assert(out("ab").as[(String, Int)].collect().toSet == Set(("k", 1), ("k", 2)))
+  }
+
+  test("a failing node: its sibling commits, its dependent never runs, run() rethrows") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val m = new Materializer(spark, freshDir())
+    val (first, second) = (new IllegalStateException("first"), new IllegalArgumentException("second"))
+    val secondThrown = new CountDownLatch(1)
+    val dependentRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val nodes = Seq(
+      // fails LAST in time but is declared first: its failure is the one rethrown
+      Node("bad", Mat.Table, Nil, (_, _) => {
+        secondThrown.await(60, TimeUnit.SECONDS); throw first
+      }),
+      Node("good", Mat.Table, Nil, (_, _) => srcFrame(Seq(("g", 1)))),
+      Node("bad2", Mat.Table, Nil, (_, _) => {
+        secondThrown.countDown(); throw second
+      }),
+      Node("child", Mat.Table, Seq("bad"), (_, _) => {
+        dependentRan.set(true); srcFrame(Seq(("c", 1)))
+      }))
+    val e = intercept[IllegalStateException](new Dag(m, nodes).run())
+    assert(e eq first)
+    assert(m.exists("good"), "the failed node's sibling must still commit")
+    assert(!dependentRan.get() && !m.exists("child"), "a failed node's dependent ran")
+  }
+
   test("table fully refreshes; incremental upserts across runs") {
     val m = new Materializer(spark, freshDir())
     var rows = Seq(("a", 5), ("b", 7))

@@ -251,6 +251,23 @@ class MaterializerSpec extends SparkSpec {
     assert(out == Map("k1" -> 1, "k2" -> 20, "k3" -> 30))
   }
 
+  test("a version dir without a stored schema still reads and upserts") {
+    val dir = freshDir()
+    val mat = new Materializer(spark, dir)
+    mat.materialize("t", "id")(_ => Seq(("k1", 1), ("k2", 2)).toDF("id", "v"))
+    val stored = java.nio.file.Paths.get(mat.outPath("t"), Materializer.SchemaFile)
+    assert(Files.exists(stored), "a commit must record its schema")
+    // a version written before schemas were stored: inference fallback
+    Files.delete(stored)
+    assert(mat.readPrior("t").get.as[(String, Int)].collect().toMap ==
+      Map("k1" -> 1, "k2" -> 2))
+    val out = mat.materialize("t", "id")(_ => Seq(("k2", 20), ("k3", 30)).toDF("id", "v"))
+    assert(out.as[(String, Int)].collect().toMap == Map("k1" -> 1, "k2" -> 20, "k3" -> 30))
+    // the upsert's own version records its schema again
+    assert(Files.exists(java.nio.file.Paths.get(mat.outPath("t"), Materializer.SchemaFile)))
+    assert(out.schema == spark.read.parquet(mat.outPath("t")).schema)
+  }
+
   test("append strategy: batches accumulate with no key matching; duplicates survive") {
     val mat = new Materializer(spark, freshDir())
     mat.materializeAppend("log")(_ => Seq(("e1", 1), ("e2", 2)).toDF("id", "v"))

@@ -96,6 +96,50 @@ class ModelDagSpec extends SparkSpec {
     assert(schemas(refreshed) == schemas(expected))
   }
 
+  /** For each job `f` runs OUTSIDE a SQL execution — i.e. each parquet
+    * schema-inference job — the names of its stages (`parquet at
+    * <file>:<line>`, the reading call site).
+    */
+  private def inferenceJobs(f: => Unit): Seq[Seq[String]] = {
+    val jobs = java.util.Collections.synchronizedList(new java.util.ArrayList[Seq[String]]())
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          jobs.add(e.stageInfos.map(_.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.GraftListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.ListHasAsScala(jobs).asScala.toSeq
+  }
+
+  test("incremental Graft.run infers each source table once and no table it wrote") {
+    for (sql <- Seq(false, true)) {
+      val dir = freshDir("graft-dag-jobs")
+      Graft.run(spark, "/root/testdata/sf0.001", dir, sql = sql)
+      val jobs = inferenceJobs(Graft.run(spark, "/root/testdata/sf0.001", dir, sql = sql))
+      def at(file: String) = jobs.count(_.exists(_.startsWith(s"parquet at $file:")))
+      // `events` is the only source table the three models read
+      assert(at("Sources.scala") == 1, s"sql=$sql: $jobs")
+      assert(at("Materializer.scala") == 0, s"sql=$sql: $jobs")
+    }
+  }
+
+  test("stored-schema reads equal inferred schemas for all three models on both surfaces") {
+    for (sql <- Seq(false, true)) {
+      val dir = freshDir("graft-dag-schema")
+      runDag(dir, sql)
+      val out = runDag(dir, sql) // incremental: prior and commit read back
+      val mat = new Materializer(spark, dir)
+      assert(out.size == 3)
+      out.foreach { case (m, df) =>
+        val inferred = spark.read.parquet(mat.outPath(m)).schema
+        assert(df.schema == inferred, s"$m (sql=$sql) commit read-back")
+        assert(mat.readPrior(m).get.schema == inferred, s"$m (sql=$sql) prior")
+      }
+    }
+  }
+
   test("daily model output feeds lead model spend enrichment") {
     // sf0.01: at sf0.001 the (campaign, date) spend join legitimately has
     // zero matches (verified against the DuckDB oracle — 0 of 27 rows)

@@ -30,6 +30,14 @@ class ParallelizeSpec extends SparkSpec {
     assert(out eq alreadyWide)
   }
 
+  test("fanOut returns a streaming frame unchanged instead of touching its RDD") {
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val df = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long].toDF().toDF("id")
+    assert(df.isStreaming)
+    assert(Parallelize.fanOut(df, col("id")) eq df)
+  }
+
   test("fanOut relocates rows without changing them (keyed, deterministic)") {
     val narrow = spark.range(0, 5000).coalesce(1)
       .select(col("id"), (col("id") * 37 % 101).as("v"))
