@@ -94,18 +94,22 @@ object Graft {
           sql: Boolean = false): Map[String, DataFrame] = {
     Sources.bootstrap(spark)
     new Dag(new Materializer(spark, warehouseDir),
-      models(Sources(spark, sourceDir), sql)).run()
+      models(Sources(spark, sourceDir).events, sql)).run()
   }
 
-  /** The reference's three models as [[Dag]] nodes, each an incremental
-    * upsert on `id` (SURVEY §2.10). The reference hides the
-    * traffic_daily_agg → lead_activities_agg dependency by reading model
-    * 1's output *as a source* (sources.yml:12 + lead_activities_agg.sql:110),
-    * so dbt would not order them; here it is a declared dep, and model 3
-    * receives model 1's freshly materialized output.
+  /** The reference's three models as [[Dag]] nodes over the fixture
+    * `events` frame, each an incremental upsert on `id` (SURVEY §2.10).
+    * All three reference sources derive from `events` (RefShapes), so a
+    * filter on `events` is a filter on every source — the registry's
+    * two-run incremental rows build their first run from a slice of it.
+    * The reference hides the traffic_daily_agg → lead_activities_agg
+    * dependency by reading model 1's output *as a source*
+    * (sources.yml:12 + lead_activities_agg.sql:110), so dbt would not
+    * order them; here it is a declared dep, and model 3 receives model
+    * 1's freshly materialized output.
     *
     * `sql = true` builds each model from its SQL text (the three
-    * reference source views registered from `sources` —
+    * reference source views registered from `events` —
     * [[SqlModels.registerSourceViews]] — the `{{ this }}` seam resolved
     * to the prior table through a temp view, the hidden edge through the
     * `public_public.traffic_daily_agg` source view); otherwise from the
@@ -113,10 +117,10 @@ object Graft {
     *
     * @param log sink for the A5 debug lines (default: stdout).
     */
-  private[graft] def models(sources: Sources, sql: Boolean,
+  private[graft] def models(events: DataFrame, sql: Boolean,
                             log: String => Unit = m => println(m)): Seq[Dag.Node] = {
-    val spark = sources.events.sparkSession
-    val events = RefShapes.eventsRef(sources.events)
+    val spark = events.sparkSession
+    val eventsRef = RefShapes.eventsRef(events)
     def node(name: String, deps: String*)(
         build: (Map[String, DataFrame], Option[DataFrame]) => DataFrame) =
       Dag.Node(name, Dag.Mat.Incremental("id"), deps, build)
@@ -125,17 +129,17 @@ object Graft {
       prior.fold(full) { p => p.createOrReplaceTempView(view); where(view) }
     if (!sql) Seq(
       node("traffic_daily_agg") { (_, prior) =>
-        TrafficDailyAgg.build(events, RefShapes.campaignSpendsRef(sources.events), prior)
+        TrafficDailyAgg.build(eventsRef, RefShapes.campaignSpendsRef(events), prior)
       },
-      node("traffic_pages_agg") { (_, prior) => TrafficPagesAgg.build(events, prior) },
+      node("traffic_pages_agg") { (_, prior) => TrafficPagesAgg.build(eventsRef, prior) },
       node("lead_activities_agg", "traffic_daily_agg") { (refs, prior) =>
         val wm = Filters.watermark(prior, "activity_date")
-        logLeadDebugCounts(sources, events, wm, log)
-        LeadActivitiesAgg.buildSince(events, RefShapes.leadStageChangeEventsRef(sources.events),
+        logLeadDebugCounts(events, eventsRef, wm, log)
+        LeadActivitiesAgg.buildSince(eventsRef, RefShapes.leadStageChangeEventsRef(events),
           refs("traffic_daily_agg"), wm)
       })
     else {
-      SqlModels.registerSourceViews(sources)
+      SqlModels.registerSourceViews(events)
       Seq(
         node("traffic_daily_agg") { (_, prior) =>
           val (ev, sp) = seam(prior, "graft_dag_this_daily", ("", ""))(
@@ -149,7 +153,7 @@ object Graft {
         node("lead_activities_agg", "traffic_daily_agg") { (refs, prior) =>
           refs("traffic_daily_agg").createOrReplaceTempView(
             SqlModels.sourceView("public_public", "traffic_daily_agg"))
-          logLeadDebugCounts(sources, events, Filters.watermark(prior, "activity_date"), log)
+          logLeadDebugCounts(events, eventsRef, Filters.watermark(prior, "activity_date"), log)
           spark.sql(SqlModels.leadActivitiesAggSql(
             seam(prior, "graft_dag_this_leads", "")(SqlModels.leadsIncrementalWhere)))
         })
@@ -167,14 +171,14 @@ object Graft {
     * (logging only). `wm` is the leads watermark the caller collected
     * from the prior output (None on a full build).
     */
-  private def logLeadDebugCounts(sources: Sources, events: DataFrame,
+  private def logLeadDebugCounts(events: DataFrame, eventsRef: DataFrame,
                                  wm: Option[java.sql.Date], log: String => Unit): Unit = {
-    val leadsSrc = RefShapes.leadStageChangeEventsRef(sources.events)
+    val leadsSrc = RefShapes.leadStageChangeEventsRef(events)
     // a union concatenates its children's partitions in order and each
     // global aggregate is one row, so row 0 is the lead count
     val Array(leadCount, eventUserCount) = Filters.watermarkFilter(leadsSrc, "date", wm)
       .agg(count(lit(1)))
-      .union(events
+      .union(eventsRef
         .filter(col("event") === "page_view" &&
           Filters.botFilter(col("useragent")) &&
           col("refr_medium") =!= "internal")

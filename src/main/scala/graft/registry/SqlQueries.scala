@@ -4,28 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sql.SqlModels
 
 /** SQL-front-end golden queries: the three reference models run through
-  * `spark.sql(...)` over the registered view catalog (graft.sql.SqlModels)
-  * instead of the DataFrame builders — same inputs, same semantics, so
-  * they hash-check against the SAME DuckDB oracles as the q_model_*
-  * DataFrame queries. Each model additionally runs two-batch incremental
-  * through the production Materializer path with the `{{ this }}` seam
-  * resolved to a prior-output view — covering all three reference
-  * watermark shapes in the SQL surface (pages: single watermark; daily:
-  * independent dual watermarks; leads: leads-only watermark + full events
-  * rescan), so the reference's complete incremental contract holds in its
-  * native surface.
+  * `spark.sql(...)` over the three reference source views
+  * (graft.sql.SqlModels) instead of the DataFrame builders — same inputs,
+  * same semantics, so they hash-check against the SAME DuckDB oracles as
+  * the q_model_* DataFrame queries. Each model also runs two-batch
+  * incremental through the production SQL-surface DAG nodes
+  * (`Graft.models(sql = true)`, [[ModelQueries.incrRow]]), whose `{{ this }}`
+  * seams cover all three reference watermark shapes (pages: single
+  * watermark; daily: independent dual watermarks; leads: leads-only
+  * watermark + full events rescan) — the reference's complete incremental
+  * contract in its native surface.
   */
 object SqlQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private val PagesCut = "\n      AND CAST(collector_tstamp AS DATE) <= DATE '2024-01-15'"
-  private val DailyEventsCut = "\n      AND DATE(collector_tstamp) <= DATE '2024-01-15'"
-  private val DailySpendsCut = "\n      AND DATE(cs.spend_date) <= DATE '2024-01-15'"
-  private val LeadsCut = "\n  WHERE date <= DATE '2024-01-15'"
-  private val ThisPages = "graft_this_traffic_pages_agg"
-  private val ThisDaily = "graft_this_traffic_daily_agg"
-  private val ThisLeads = "graft_this_lead_activities_agg"
 
   val queries: Map[String, Q] = Map(
     "q_model_pages_sql" -> ((s, dir) => {
@@ -40,60 +32,9 @@ object SqlQueries {
       SqlModels.ensureCatalog(s, dir)
       SqlModels.runLeads(s)
     }),
-    // model 2 incrementally through the SQL surface: batch 1 full-builds
-    // the pre-cutoff slice, batch 2 watermarks on {{ this }} (the prior
-    // output registered as a view) — production Materializer write/swap,
-    // same oracle as the DataFrame-path q_model_pages_incr.
-    "q_model_pages_sql_incr" -> ((s, dir) => {
-      SqlModels.ensureCatalog(s, dir)
-      ModelQueries.incrViaMaterializer(s, "traffic_pages_agg_sql")(
-        SqlModels.runPages(s, PagesCut)) { prior =>
-        val where = prior.map { p =>
-          p.createOrReplaceTempView(ThisPages)
-          SqlModels.pagesIncrementalWhere(ThisPages)
-        }.getOrElse("")
-        SqlModels.runPages(s, where)
-      }
-    }),
-    // model 1 incrementally through the SQL surface: events AND spends
-    // watermark INDEPENDENTLY on max(spend_date) of {{ this }} — the
-    // reference's dual-watermark quirk (traffic_daily_agg.sql:25-27 vs
-    // :87-89) running in its native surface, same oracle as the
-    // DataFrame-path q_model_daily_incr.
-    "q_model_daily_sql_incr" -> ((s, dir) => {
-      SqlModels.ensureCatalog(s, dir)
-      ModelQueries.incrViaMaterializer(s, "traffic_daily_agg_sql")(
-        SqlModels.runDaily(s, DailyEventsCut, DailySpendsCut)) { prior =>
-        val (evWhere, spWhere) = prior.map { p =>
-          p.createOrReplaceTempView(ThisDaily)
-          SqlModels.dailyIncrementalWheres(ThisDaily)
-        }.getOrElse(("", ""))
-        SqlModels.runDaily(s, evWhere, spWhere)
-      }
-    }),
-    // model 3 incrementally through the SQL surface: only the LEAD scan
-    // watermarks (on max(activity_date) of {{ this }}); the events scan
-    // rescans fully every run — lead_activities_agg.sql:99-101's quirk in
-    // its native surface, same oracle as q_model_leads_incr. The leads CTE
-    // has no base WHERE, so the seam is a WHERE clause rather than
-    // incrementalWhere's AND form; the hidden-edge daily input is
-    // materialized once and registered as the source view (dbt reads the
-    // table), not rebuilt inside each batch like runLeads does for
-    // one-shot queries.
-    "q_model_leads_sql_incr" -> ((s, dir) => {
-      SqlModels.ensureCatalog(s, dir)
-      ModelQueries.incrViaMaterializerSetup(s, "lead_activities_agg_sql") { mat =>
-        mat.materialize("traffic_daily_agg_sql_dep", "id")(_ => SqlModels.runDaily(s))
-          .createOrReplaceTempView(SqlModels.sourceView("public_public", "traffic_daily_agg"))
-        val build: Option[DataFrame] => DataFrame = {
-          case None => s.sql(SqlModels.leadActivitiesAggSql(LeadsCut))
-          case Some(p) =>
-            p.createOrReplaceTempView(ThisLeads)
-            s.sql(SqlModels.leadActivitiesAggSql(SqlModels.leadsIncrementalWhere(ThisLeads)))
-        }
-        build
-      }
-    }),
+    ModelQueries.incrRow("q_model_pages_sql_incr", "traffic_pages_agg", sql = true),
+    ModelQueries.incrRow("q_model_daily_sql_incr", "traffic_daily_agg", sql = true),
+    ModelQueries.incrRow("q_model_leads_sql_incr", "lead_activities_agg", sql = true),
   )
 
   val oracle: Map[String, String] = Map(

@@ -98,9 +98,6 @@ object Dag {
     }
     out.result()
   }
-
-  /** [[levels]] flattened: a declaration-order-stable topological sort. */
-  private[runtime] def topoSort(nodes: Seq[Node]): Seq[Node] = levels(nodes).flatten
 }
 
 final class Dag(mat: Materializer, nodes: Seq[Dag.Node]) {

@@ -299,15 +299,6 @@ final class Materializer(spark: SparkSession, baseDir: String,
   def fragmented(table: String, uniqueKey: String): FragmentedTable =
     new FragmentedTable(spark, baseDir, table, uniqueKey)
 
-  /** [[BucketedFragmentStore]] handle in this warehouse — the sharded
-    * layout for corpora whose manifests / compaction / point lookups
-    * need per-bucket bounds. Creates with `buckets` shards or validates
-    * against the stored count on reopen.
-    */
-  def bucketedFragments(table: String, uniqueKey: String,
-                        buckets: Int = 16): BucketedFragmentStore =
-    BucketedFragmentStore(spark, baseDir, table, uniqueKey, buckets)
-
   /** Run one model incrementally. `build` receives the prior output (None
     * on first run) and returns the fresh batch, keyed by `uniqueKey`.
     * `onSchemaChange` is dbt's schema-drift knob ([[SchemaEvolution]]);

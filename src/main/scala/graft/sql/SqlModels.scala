@@ -10,7 +10,7 @@ import graft.runtime.Sources
   * module re-expresses each model in Spark SQL dialect over registered
   * temp views, resolving those seams the way dbt's compile step does:
   *
-  *   - `source(s, t)`  → view `s_t` (registered by [[registerCatalog]])
+  *   - `source(s, t)`  → view `s_t` (registered by [[registerSourceViews]])
   *   - `{{ this }}`    → a caller-registered prior-output view, read
   *                       through [[incrementalWhere]]
   *   - `is_incremental()` → the `*Where` parameters (empty = first run /
@@ -36,59 +36,43 @@ object SqlModels {
   /** dbt `source('schema','table')` → temp-view name. */
   def sourceView(schema: String, table: String): String = s"${schema}_$table"
 
-  /** Register the catalog a reference user expects: every fixture table
-    * under its own name, plus the three reference-shaped source views
-    * (`atomic_events`, `public_campaign_spends`,
-    * `public_lead_stage_change_events`) derived via RefShapes — the SQL
-    * analog of `models/sources.yml:3-18`. Idempotent (replace-on-register).
+  /** The three reference-shaped source views (`atomic_events`,
+    * `public_campaign_spends`, `public_lead_stage_change_events`) derived
+    * from fixture `events` via RefShapes — the SQL analog of
+    * `models/sources.yml:3-18`, and everything the three model SQL texts
+    * read besides `{{ this }}` and the hidden-edge view. Replaces any
+    * earlier registration. The frame carries no source dir, so this
+    * drops the session's [[ensureCatalog]] memo.
     */
-  def registerCatalog(spark: SparkSession, dir: String): Unit = {
-    val src = Sources(spark, dir)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach(t => src.table(t).createOrReplaceTempView(t))
-    registerSourceViews(src)
-    registered.put(spark, dir)
-  }
-
-  /** Only the three reference-shaped source views, from `src`'s
-    * `events` — everything the three model SQL texts read besides
-    * `{{ this }}` and the hidden-edge view, so the DAG's SQL surface
-    * resolves one source table instead of the whole catalog. A session
-    * whose catalog was registered for another dir loses its
-    * [[ensureCatalog]] memo: its views no longer all come from one dir.
-    */
-  def registerSourceViews(src: Sources): Unit = {
-    val events = src.events
+  def registerSourceViews(events: DataFrame): Unit = {
     RefShapes.eventsRef(events)
       .createOrReplaceTempView(sourceView("atomic", "events"))
     RefShapes.campaignSpendsRef(events)
       .createOrReplaceTempView(sourceView("public", "campaign_spends"))
     RefShapes.leadStageChangeEventsRef(events)
       .createOrReplaceTempView(sourceView("public", "lead_stage_change_events"))
-    val spark = events.sparkSession
-    if (registered.get(spark) != src.dir) registered.remove(spark)
+    registered.remove(events.sparkSession)
   }
 
-  // last catalog registration per session — [[ensureCatalog]]'s memo.
-  // Weak keys: a retired session must not be pinned by the memo.
+  // the dir each session's source views were last registered from by
+  // [[ensureCatalog]]. Weak keys: a retired session must not be pinned.
   private val registered =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
-  /** Idempotent fast path of [[registerCatalog]] (r18): re-registering
-    * the 13-view catalog re-builds and re-ANALYZES the RefShapes
-    * expression trees (createOrReplaceTempView stores the analyzed
-    * plan) on every call — pure catalog-metadata work, ~0.2-0.3 s per
-    * call at 32 cores, paid by every SQL-surface query invocation.
-    * This skips the rebuild when THIS session already registered THIS
-    * dir. No data or results are cached — the views are lazy scans,
-    * recomputed from parquet by every downstream action; callers that
-    * may have REPLACED individual views out from under the catalog
-    * (tests do) keep using [[registerCatalog]] directly.
+  /** [[registerSourceViews]] over `dir`'s `events`, skipped when this
+    * session already registered this dir: re-registering re-builds and
+    * re-ANALYZES the RefShapes expression trees (createOrReplaceTempView
+    * stores the analyzed plan) — pure catalog-metadata work that cost
+    * each one-shot SQL-surface query a job and 0.15-0.2 s. No data or
+    * results are cached — the views are lazy scans, recomputed from
+    * parquet by every downstream action.
     */
   def ensureCatalog(spark: SparkSession, dir: String): Unit =
-    if (registered.get(spark) != dir) registerCatalog(spark, dir)
+    if (registered.get(spark) != dir) {
+      registerSourceViews(Sources(spark, dir).events)
+      registered.put(spark, dir)
+    }
 
   /** The `is_incremental()` high-watermark predicate against a
     * `{{ this }}` view (traffic_pages_agg.sql:20-24 and siblings):
@@ -97,9 +81,8 @@ object SqlModels {
   def incrementalWhere(dateExpr: String, wmCol: String, thisView: String): String =
     s"\n      AND $dateExpr > (SELECT COALESCE(MAX($wmCol), DATE '1900-01-01') FROM $thisView)"
 
-  // Per-model seam resolutions — the single source for each model's
-  // watermark wiring, shared by the registry's gated incremental queries
-  // (SqlQueries) and the DAG run's SQL surface (Graft.run(sql = true)).
+  // Per-model seam resolutions — each model's watermark wiring for the
+  // DAG's SQL surface (Graft.models(sql = true)).
 
   /** Pages seam (traffic_pages_agg.sql:20-24): one watermark on `date`. */
   def pagesIncrementalWhere(thisView: String): String =
@@ -312,7 +295,7 @@ object SqlModels {
       |WHERE new_stage_id IS NOT NULL AND new_stage_name IS NOT NULL
       |  AND pipeline_id IS NOT NULL AND pipeline_name IS NOT NULL""".stripMargin
 
-  /** Run model 2 through the SQL surface (catalog must be registered). */
+  /** Run model 2 through the SQL surface (source views must be registered). */
   def runPages(spark: SparkSession, eventsWhere: String = ""): DataFrame =
     spark.sql(trafficPagesAggSql(eventsWhere))
 
@@ -325,9 +308,9 @@ object SqlModels {
     * it under the hidden-edge source name, then runs the leads SQL —
     * exactly dbt's implicit dependency resolution.
     */
-  def runLeads(spark: SparkSession, leadsWhere: String = ""): DataFrame = {
+  def runLeads(spark: SparkSession): DataFrame = {
     runDaily(spark).createOrReplaceTempView(
       sourceView("public_public", "traffic_daily_agg"))
-    spark.sql(leadActivitiesAggSql(leadsWhere))
+    spark.sql(leadActivitiesAggSql())
   }
 }

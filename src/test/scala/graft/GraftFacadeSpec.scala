@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The front door must hand back a session with the engine wired in and
-  * run the DAG identically to driving ModelDag by hand.
+/** The front door must hand back a session with the engine wired in, and
+  * `Graft.run` must materialize the three reference models' Dag and
+  * re-run it incrementally without changing their content.
   */
 class GraftFacadeSpec extends AnyFunSuite {
 

@@ -127,17 +127,17 @@ class DagSpec extends SparkSpec {
 
   test("unknown ref and cycles fail fast, naming the offenders") {
     val e1 = intercept[IllegalArgumentException] {
-      Dag.topoSort(Seq(Node("m", Mat.Table, Seq("ghost"), (_, _) => srcFrame(Nil))))
+      Dag.levels(Seq(Node("m", Mat.Table, Seq("ghost"), (_, _) => srcFrame(Nil))))
     }
     assert(e1.getMessage.contains("ghost"))
     val e2 = intercept[IllegalArgumentException] {
-      Dag.topoSort(Seq(
+      Dag.levels(Seq(
         Node("x", Mat.Table, Seq("y"), (_, _) => srcFrame(Nil)),
         Node("y", Mat.Table, Seq("x"), (_, _) => srcFrame(Nil))))
     }
     assert(e2.getMessage.contains("cycle"))
     val e3 = intercept[IllegalArgumentException] {
-      Dag.topoSort(Seq(
+      Dag.levels(Seq(
         Node("d", Mat.Table, Nil, (_, _) => srcFrame(Nil)),
         Node("d", Mat.Table, Nil, (_, _) => srcFrame(Nil))))
     }
@@ -172,6 +172,6 @@ class DagSpec extends SparkSpec {
       Node("a", Mat.View, Nil, (_, _) => srcFrame(Seq(("a", 1)))),
       Node("b", Mat.View, Seq("a"), (r, _) => r("a")),
       Node("d", Mat.View, Seq("c", "b"), (r, _) => r("b")))
-    assert(Dag.topoSort(names).map(_.name) == Seq("a", "c", "b", "d"))
+    assert(Dag.levels(names).flatten.map(_.name) == Seq("a", "c", "b", "d"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.runtime
 
 import graft.{Graft, SparkSpec}
+import graft.registry.{ModelQueries, SqlQueries}
 import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
@@ -16,7 +17,7 @@ class ModelDagSpec extends SparkSpec {
 
   private def runDag(dir: String, sql: Boolean,
                      log: String => Unit = _ => ()): Map[String, DataFrame] =
-    new Dag(new Materializer(spark, dir), Graft.models(sources(), sql, log)).run()
+    new Dag(new Materializer(spark, dir), Graft.models(sources().events, sql, log)).run()
 
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -81,6 +82,17 @@ class ModelDagSpec extends SparkSpec {
     val (df2, sql2) = both()
     assert(snap(df2) == snap(sql2), "incremental outputs diverged")
     assert(schemas(df2) == schemas(sql2), "incremental schemas diverged")
+  }
+
+  test("registry incremental rows agree across the DataFrame and SQL surfaces") {
+    val dir = sources().dir
+    for (m <- Seq("pages", "daily", "leads")) {
+      val df = Map(m -> ModelQueries.queries(s"q_model_${m}_incr")(spark, dir))
+      val sql = Map(m -> SqlQueries.queries(s"q_model_${m}_sql_incr")(spark, dir))
+      assert(snap(df)(m).nonEmpty, s"$m: empty incremental output")
+      assert(snap(df) == snap(sql), s"$m: incremental rows diverged")
+      assert(schemas(df) == schemas(sql), s"$m: incremental schemas diverged")
+    }
   }
 
   test("a warehouse first built through the SQL surface refreshes through the DataFrame surface") {

@@ -18,7 +18,7 @@ class SqlModelsSpec extends SparkSpec {
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
       .groupBy(identity).map { case (k, v) => k -> v.length }
 
-  private lazy val catalog = { SqlModels.registerCatalog(spark, dir); true }
+  private lazy val catalog = { SqlModels.registerSourceViews(Sources(spark, dir).events); true }
 
   test("pages model via spark.sql matches TrafficPagesAgg.build") {
     assert(catalog)
